@@ -1,17 +1,21 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash.
 
-Scale design notes (the point of each variant at 100 TB):
+One plan per operator (plus, for jaccard, one size guard):
   - exact: one hash-groupBy; map-side combine makes the shuffle carry one row
     per distinct hash. O(n) scan, tiny shuffle.
   - n-gram Jaccard: exact pairwise similarity but only across pairs sharing a
-    shingle (the shingle-join prunes the n² space). Fine for ≤ millions of
-    docs per shingle bucket; superseded by MinHash at web scale.
+    shingle. A bare scan of <= _JACCARD_INDEX_MAX_DOCS documents runs the
+    broadcast CSR inverted-index kernel; anything else runs the shingle
+    self-join, with a binding df cap applied by a df join + per-id re-size
+    window. Superseded by MinHash at web scale.
   - MinHash+LSH: constant-size signature (k mins) per doc, banded into b
     buckets; candidate pairs only within equal (band, band_hash) — the
-    standard web-dedup path (Broder '97; Leskovec et al., MMDS ch.3). All
+    standard web-dedup path (Broder '97; Leskovec et al., MMDS ch.3). Wide
+    banding: signatures ride the band explode into one self-join. All
     hashing via xxhash64 JVM-side; no UDF.
-  - SimHash: 64-bit near-dup fingerprint (Charikar '02); Hamming-adjacent
-    fingerprints are candidates. Bit arithmetic via bitwise aggregates.
+  - SimHash: 64-bit near-dup fingerprint (Charikar '02) from 32 packed
+    two-lane vote aggregates; single-chunk blocking into one exchange, then
+    a per-bucket ±1 GEMM Hamming verify.
 """
 
 from __future__ import annotations
@@ -118,10 +122,6 @@ def shingles(df: DataFrame, n: int = 3, text_col: str = "text",
     ).filter(F.col("shingle").isNotNull())
 
 
-# above this many over-cap shingles the literal array_except plan would blow
-# up the expression tree; fall back to the anti-join + window plan instead
-_HOT_SHINGLE_LITERAL_LIMIT = 1024
-
 # jaccard_pairs inverted-index kernel guard: the exact-pairwise operator is
 # the documented small/medium-corpus path (minhash_lsh_pairs is the web-scale
 # one), so up to this many documents the whole (doc, shingle) incidence —
@@ -144,10 +144,11 @@ def _jaccard_index_pairs(sets: DataFrame, threshold: float,
     lists — Σ df(s)²/2 integer appends, the same asymptotic work as the join,
     at numpy speed and with NO pair shuffle at all (only above-threshold
     survivors leave the kernel). The df cap drops over-cap shingles from
-    every document before sizes are taken — byte-identical semantics to the
-    array_except branch. The kernel emits integer (n_inter, sz_a, sz_b) with
-    a conservative raw-ratio margin; the exact round(·,6) >= threshold
-    filter runs JVM-side, so the output is bit-identical to the join plan."""
+    every document before sizes are taken — the same semantics as the join
+    plan's df join + re-size window. The kernel emits integer (n_inter,
+    sz_a, sz_b) with a conservative raw-ratio margin; the exact
+    round(·,6) >= threshold filter runs JVM-side, so the output is
+    bit-identical to the join plan."""
     import logging
 
     import numpy as np
@@ -271,83 +272,41 @@ def jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.8,
     blowup guard everywhere else; pass None for the exact/uncapped semantics,
     or use minhash_lsh_pairs at web scale.
 
-    Cap cost discipline: over-cap shingles are found with ONE eager
-    aggregate over the persisted shingle sets (the count of dropped shingles
-    is logged). The common case — few boilerplate shingles — then removes
-    them via array_except with a LITERAL hot list, so the main self-join
-    plan is byte-identical in shape to the uncapped one (zero extra
-    shuffles; a df-table join + re-size window here measured 8x wall at
-    sf0.1). Only a pathological corpus (> _HOT_SHINGLE_LITERAL_LIMIT hot
-    shingles) pays for the join+window plan, which is correct at any
-    hot-list size."""
-    import logging
-
+    A cap that can bind (more documents than the cap) is applied in the join
+    plan by a document-frequency join plus a per-id count window that
+    re-takes each set's size — correct at any number of over-cap shingles."""
     # document frequency is bounded by the document count, so the cap cannot
     # bind on a corpus with <= cap documents. Decide BEFORE building plans
     # when the input is a bare scan (one cheap column-less count): the
-    # common small-corpus call then runs zero probe jobs and stays as lazy
-    # as the uncapped plan. Derived inputs fall through to a probe on the
-    # persisted sets below (one job that doubles as the cache warm-up),
-    # never an eager count of the raw lineage.
+    # common small-corpus call then runs zero probe jobs. Derived inputs
+    # fall through to a count of the persisted sets below (one job that
+    # doubles as the cache warm-up), never an eager count of the raw lineage.
     n_docs = _cheap_count(df) if max_shingle_df is not None else None
+    if n_docs is not None and n_docs <= max_shingle_df:
+        max_shingle_df = None
+    sets = _shingle_sets(_widen(df), n, text_col, id_col)
     if n_docs is not None and n_docs <= _JACCARD_INDEX_MAX_DOCS:
         # small/medium corpus with a knowable size: broadcast inverted-index
         # kernel — no self-join, no pair shuffle, no probe job, no persist.
         # Only reached for CAPPED builds on bare scans, which were already
-        # eager at build time (the cap probe); the uncapped call keeps its
+        # eager at build time (the size count); the uncapped call keeps its
         # fully-lazy join plan (pinned by
         # test_jaccard_probe_goes_through_the_cache).
-        if n_docs <= max_shingle_df:
-            max_shingle_df = None
-        sets = _shingle_sets(_widen(df), n, text_col, id_col)
         return _jaccard_index_pairs(sets, threshold, max_shingle_df)
-    if n_docs is not None and n_docs <= max_shingle_df:
-        max_shingle_df = None
-    sets = _shingle_sets(_widen(df), n, text_col, id_col)
-    # persist: BOTH sides of the self-join (and the hot-shingle probe) read
-    # this subtree — without it the whole normalize+shingle expansion runs
-    # per consumer; measured 10x wall at sf0.1. Keep a handle on the
-    # persisted plan: unpersist() matches plans by sameResult, so a later
-    # rebinding of `sets` (the literal hot-list branch) must not be what we
-    # hand to release_on_gc.
-    sets = persisted = sets.persist()
-    heavy_cap = False
+    # persist: BOTH sides of the self-join read this subtree — without it
+    # the whole normalize+shingle expansion runs per consumer; measured 10x
+    # wall at sf0.1
+    sets = sets.persist()
     if (max_shingle_df is not None and n_docs is None
-            and persisted.count() <= max_shingle_df):
+            and sets.count() <= max_shingle_df):
         max_shingle_df = None
-    if max_shingle_df is not None:
-        log = logging.getLogger(__name__)
-        hot_rows = (
-            sets.select(F.explode_outer("sh_arr").alias("shingle"))
-            .filter(F.col("shingle").isNotNull())
-            .groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("shingle")
-            .limit(_HOT_SHINGLE_LITERAL_LIMIT + 1)
-            .collect()
-        )
-        if not hot_rows:
-            pass   # cap never binds: the exact plan, untouched
-        elif len(hot_rows) <= _HOT_SHINGLE_LITERAL_LIMIT:
-            hot = [r["shingle"] for r in hot_rows]
-            log.warning("jaccard_pairs: df cap %d drops %d distinct shingles",
-                        max_shingle_df, len(hot))
-            sets = sets.withColumn(
-                "sh_arr",
-                F.array_except("sh_arr", F.array(*[F.lit(s) for s in hot])))
-        else:
-            log.warning(
-                "jaccard_pairs: df cap %d drops > %d distinct shingles — "
-                "using the join-based cap plan", max_shingle_df,
-                _HOT_SHINGLE_LITERAL_LIMIT)
-            heavy_cap = True
     # explode_outer + null-drop: see shingles() — a plain explode's inferred
     # size()>0 filter would re-run the whole shingle build serially below
     # the widen exchange
     sh = sets.select("id", F.size("sh_arr").alias("sz"),
                      F.explode_outer("sh_arr").alias("shingle")
                      ).filter(F.col("shingle").isNotNull())
-    if heavy_cap:
+    if max_shingle_df is not None:
         dfreq = (sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
                  .filter(F.col("df") <= max_shingle_df))
         capped = sh.join(dfreq.select("shingle"), "shingle")
@@ -372,10 +331,8 @@ def jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.8,
         .select("id_a", "id_b", "jaccard")
     )
     # cache lifetime = result lifetime (long-lived drivers would otherwise
-    # leak one cached subtree per invocation); see functions/cache.py.
-    # `persisted`, not `sets`: the hot-list branch rebinds `sets` to a
-    # derived plan that unpersist() would no-op on.
-    return release_on_gc(out, persisted)
+    # leak one cached subtree per invocation); see functions/cache.py
+    return release_on_gc(out, sets)
 
 
 def dup_components(pairs: DataFrame, all_ids: DataFrame | None = None,
@@ -464,101 +421,42 @@ def minhash_signatures(df: DataFrame, num_hashes: int = 64, n: int = 3,
     return sig.select("id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
 
 
-# below this corpus size WIDE banding wins: at 16 bands the wide explode
-# ships 16x(sig 512B + key) per doc — ~9 MB per 1k docs, trivial until the
-# corpus reaches the 100k+ regime — while the narrow shape pays two extra
-# candidate shuffles (dedup + by-id signature join-backs). Above it the sig
-# payload dominates every exchange (1M docs ≈ 8.8 GB wide vs ~0.25 GB
-# narrow) and the join-backs touch only surviving candidates.
-_NARROW_SHUFFLE_MIN_DOCS = 200_000
-
-
 def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 64, bands: int = 16,
                       n: int = 3, threshold: float = 0.5,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      narrow: bool | None = None) -> DataFrame:
+                      text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Candidate near-dup pairs via banded LSH, then verified by estimated
     Jaccard (signature agreement). Returns (id_a, id_b, est_jaccard).
 
-    Two plan shapes, identical answers (pinned by the XXH64 value oracle):
-
-    narrow=True — the 100 TB shape (same as lsh_cosine_topk): the band
-    explode and (band, bh) self-join carry only (id, band, bh); signatures
-    stay in the persisted one-row-per-doc table and join back BY ID only
-    for surviving candidates' agreement estimate. At 16 bands a wide
-    banding ships 16 copies of the 512-byte signature per doc through the
-    explode shuffle plus sig_a/sig_b on every candidate row.
-
-    narrow=False — the small-corpus shape: signatures ride the banding
-    explode and the single self-join produces (sig_a, sig_b) directly —
-    fewer shuffles, and the payload cost is irrelevant below
-    _NARROW_SHUFFLE_MIN_DOCS (bytes math on the constant).
-
-    Default (None) auto-selects by corpus size: a bare-scan input is counted
-    directly (cheap column-less pass); a derived input counts the persisted
-    signature table (one job that doubles as the cache warm-up)."""
+    Wide banding: signatures ride the banding explode and the single
+    (band, bh) self-join produces (sig_a, sig_b) directly — no by-id
+    join-backs and no second candidate dedup. At 16 bands the explode ships
+    16 copies of the 512-byte signature per doc (~9 MB per 1k docs), which
+    stays small until the corpus reaches the 100k+ document regime."""
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, num_hashes, n, text_col, id_col)
-    cached: list[DataFrame] = []
-    if narrow is None:
-        n_docs = _cheap_count(df)
-        if n_docs is None:
-            sig = sig.persist()
-            cached.append(sig)
-            n_docs = sig.count()
-        narrow = n_docs >= _NARROW_SHUFFLE_MIN_DOCS
-
-    def banded_cols(extra: list[str]) -> DataFrame:
-        return sig.select(
-            *extra, "id",
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
-                                     for r in range(rows_per_band)]).alias("bh"),
-                    )
-                    for b in range(bands)
-                ])
-            ).alias("bb"),
-        ).select(*extra, "id", "bb.band", "bb.bh")
-
-    if narrow:
-        # both banding sides + both agreement joins read the one-row-per-doc
-        # table; persisting it (not the 16x exploded banding) keeps the cache
-        # and every shuffle signature-free except the final by-id joins
-        sig = sig.persist()
-        if not any(c is sig for c in cached):
-            cached.append(sig)
-        banded = banded_cols([])
-        a, b = banded.alias("a"), banded.alias("b")
-        cand = (
-            a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bh") == F.col("b.bh"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        cand = (
-            cand.join(sig.select(F.col("id").alias("id_a"),
-                                 F.col("sig").alias("sig_a")), "id_a")
-            .join(sig.select(F.col("id").alias("id_b"),
-                             F.col("sig").alias("sig_b")), "id_b")
-        )
-    else:
-        # wide: one persisted exploded banding feeds both self-join sides;
-        # sigs arrive on the candidate rows, no join-backs, no second dedup
-        banded = banded_cols(["sig"]).persist()
-        cached.append(banded)
-        a, b = banded.alias("a"), banded.alias("b")
-        cand = (
-            a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bh") == F.col("b.bh"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                    F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
+    # one persisted exploded banding feeds both self-join sides
+    banded = sig.select(
+        "sig", "id",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
+                                 for r in range(rows_per_band)]).alias("bh"),
+                )
+                for b in range(bands)
+            ])
+        ).alias("bb"),
+    ).select("sig", "id", "bb.band", "bb.bh").persist()
+    a, b = banded.alias("a"), banded.alias("b")
+    cand = (
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.bh") == F.col("b.bh"))
+               & (F.col("a.id") < F.col("b.id")))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
     est = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
                           lambda m: m)) / F.lit(float(num_hashes))
     out = (
@@ -566,11 +464,11 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 64, bands: int = 16,
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
-    return release_on_gc(out, *cached)
+    return release_on_gc(out, banded)
 
 
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            pack: int = 2) -> DataFrame:
+def simhash(df: DataFrame, text_col: str = "text",
+            id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash per document (token-level, unweighted).
 
     Pure column algebra: per-token xxhash64 → 64 conditional-sum bit votes in
@@ -578,18 +476,12 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     per token; 64 agg expressions ship one partial row per doc per partition
     — map-side combined, 64x less shuffle). Sign fold happens after.
 
-    `pack`: bit votes PACKED per 64-bit aggregate buffer (1, 2, or 4) —
-    the default pack=2 keeps 32 sum aggregates with two 32-bit lanes each
-    (per-doc token cap 2^31, i.e. unbounded in practice); pack=4 keeps 16
-    with four 16-bit lanes (cap 65,535 tokens/doc — diagnostic only);
-    pack=1 is the classic one-buffer-per-bit layout. Same signature bits
-    for any pack (pinned by the XXH64 value oracle and a pack-equality
-    test). Measured across 4 fresh sessions at sf0.1 (scripts/
-    simhash_probe.py): steady-state identical (~2.0-2.2 s), but COLD cost
-    drops monotonically with packing (pack1 3.5-4.4 s, pack2 2.9-3.1 s,
-    pack4 2.2-2.8 s ≈ steady) — fewer/smaller agg buffers generate less
-    codegen for the JVM to JIT, which also shrinks the surface for the
-    never-JIT-warms sessions of round-4 verdict #2."""
+    The votes are PACKED two per 64-bit aggregate buffer: 32 sum aggregates
+    with two 32-bit lanes each (per-doc token cap 2^31, i.e. unbounded in
+    practice). Fewer, smaller agg buffers generate less codegen for the JVM
+    to JIT: measured across 4 fresh sessions at sf0.1, cold cost 2.9-3.1 s
+    vs 3.5-4.4 s for one buffer per bit, with identical steady-state cost
+    (~2.0-2.2 s) and signature bits."""
     toks = _widen(df).select(
         F.col(id_col).alias("id"),
         # explode_outer: see shingles() — the inferred size()>0 filter of a
@@ -605,34 +497,18 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     # bit-exact with the Charikar formulation (pinned by the XXH64 value
     # oracle in tests/test_hash_oracle.py). shiftright on long is
     # arithmetic, so (h >> 63) & 1 still reads the sign bit correctly.
-    if pack not in (1, 2, 4):
-        raise ValueError("simhash: pack must be 1, 2, or 4")
-    lane = 64 // pack            # bits per packed vote lane
-
     def bit(b: int):
         return F.shiftright("h", b).bitwiseAND(F.lit(1))
 
-    if pack == 1:
-        aggs = [F.sum(bit(b)).alias(f"v{b}") for b in range(64)]
+    # buffer k holds the popcount of bit 2k in its low lane and of bit 2k+1
+    # in its high lane; lanes cannot carry into each other below 2^32 tokens
+    aggs = [F.sum(bit(2 * k) + F.shiftleft(bit(2 * k + 1), 32)).alias(f"s{k}")
+            for k in range(32)]
 
-        def v(b: int):
-            return F.col(f"v{b}")
-    else:
-        # buffer k sums pack lanes at once: lane j holds the popcount of bit
-        # (k*pack + j), shifted to bit offset j*lane. Lanes cannot carry into
-        # each other below 2^lane tokens per doc.
-        def packed(k: int):
-            term = bit(k * pack)
-            for j in range(1, pack):
-                term = term + F.shiftleft(bit(k * pack + j), j * lane)
-            return F.sum(term).alias(f"s{k}")
-
-        aggs = [packed(k) for k in range(64 // pack)]
-
-        def v(b: int):
-            k, j = divmod(b, pack)
-            return (F.shiftrightunsigned(F.col(f"s{k}"), j * lane)
-                    .bitwiseAND(F.lit((1 << lane) - 1)))
+    def v(b: int):
+        k, j = divmod(b, 2)
+        return (F.shiftrightunsigned(F.col(f"s{k}"), j * 32)
+                .bitwiseAND(F.lit((1 << 32) - 1)))
 
     votes = h.groupBy("id").agg(F.count(F.lit(1)).alias("n"), *aggs)
     # sign fold as a FLAT array + interpreted HOF sum, not a 64-deep nested
@@ -650,52 +526,28 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return votes.select("id", sig.alias("simhash"))
 
 
-# below this corpus size single-chunk blocking wins: per-key random
-# collisions grow ~n²/2^w while the multi-index explode cost grows ~n·C(k,2),
-# so small corpora are explode-dominated and large ones candidate-dominated.
-# Crossover measured at sf0.1 (5k docs, h=8): single-chunk 2.8s vs
-# chunk-pair 3.9s; the ~880k single-chunk candidates only overtake the 45-key
-# explode past ~20k docs at h=8 (n²/2^7 per chunk vs 45n exploded rows).
-_SIMHASH_MULTI_INDEX_MIN_DOCS = 20_000
-
-
-def _popcount64(x):
-    """Vectorized 64-bit popcount (SWAR) for numpy arrays — numpy < 2.0 has
-    no bitwise_count. All ops are full-array passes; uint64 wraparound is the
-    intended mod-2^64 SWAR arithmetic."""
-    import numpy as np
-
-    x = x.astype(np.uint64, copy=True)
-    x -= (x >> np.uint64(1)) & np.uint64(0x5555555555555555)
-    x = (x & np.uint64(0x3333333333333333)) + (
-        (x >> np.uint64(2)) & np.uint64(0x3333333333333333))
-    x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-    return (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
-
-
-def _make_simhash_verify_kernel(n_chunks: int, widths: list[int],
-                                offsets: list[int], agree_chunks: int,
+def _make_simhash_verify_kernel(widths: list[int], offsets: list[int],
                                 max_hamming: int):
     """Per-partition pairwise Hamming verify over (chunk, cv)-keyed blocks.
 
     Input rows: (id, simhash, chunk, cv), hash-partitioned so every key's
-    rows share a partition. For each key the kernel runs a blockwise numpy
-    all-pairs XOR+popcount over the bucket (the same candidate space the old
-    JVM self-join enumerated, at native vector speed — guide §4.2) and emits
-    only pairs whose Hamming distance clears `max_hamming` AND whose
-    CANONICAL blocking key is this bucket's key. The canonical key of a pair
-    is its lexicographically-first agreeing chunk (single-chunk mode) or
-    chunk-pair (multi-index mode) — by the pigeonhole bound every qualifying
-    pair has one, and exactly one bucket owns it, so the global
-    dropDuplicates (a shuffle of EVERY candidate row — ~1.1e9 at sf1.0)
-    disappears entirely."""
+    rows share a partition. For each key the kernel runs a blockwise ±1
+    GEMM over the bucket (the same candidate space a per-key JVM self-join
+    would enumerate, at BLAS speed) and emits only pairs whose
+    Hamming distance clears `max_hamming` AND whose CANONICAL blocking key
+    is this bucket's key. The canonical key of a pair is its first agreeing
+    chunk — by the pigeonhole bound every qualifying pair has one, and
+    exactly one bucket owns it, so the global dropDuplicates (a shuffle of
+    EVERY candidate row — ~1.1e9 at sf1.0) disappears entirely."""
     import numpy as np
     import pyarrow as pa
 
     offs = np.array(offsets, dtype=np.uint64)
     masks = np.array([(1 << w) - 1 for w in widths], dtype=np.uint64)
-    # bounds the (block x bucket) XOR temp: 1024 x 16.5k uint64 ≈ 135 MB
+    # bounds the (block x bucket) score temp: 1024 x 16.5k float32 ≈ 68 MB
     block = 1024
+    bit_cols = np.arange(64, dtype=np.uint64)[None, :]
+    s_min = np.float32(64 - 2 * max_hamming)
 
     def kernel(batches):
         parts = list(batches)
@@ -715,7 +567,6 @@ def _make_simhash_verify_kernel(n_chunks: int, widths: list[int],
         starts = np.concatenate(([0], bounds))
         ends = np.concatenate((bounds, [len(order)]))
         out_a, out_b, out_h = [], [], []
-        bit_cols = np.arange(64, dtype=np.uint64)[None, :]
         for lo, hi in zip(starts, ends):
             m = hi - lo
             if m < 2:
@@ -723,34 +574,24 @@ def _make_simhash_verify_kernel(n_chunks: int, widths: list[int],
             sel = order[lo:hi]
             g_ids, g_fp = ids[sel], fp[sel]
             key = int(chunk_s[lo])
-            if agree_chunks == 1:
-                kc1, kc2 = key, None
-            else:
-                kc1, kc2 = divmod(key, n_chunks)
-            # Hamming via a ±1 GEMM for all but tiny buckets: unpack each
-            # fingerprint to a ±1 float32 row; dot(a,b) = 64 - 2*hamming,
-            # integer-valued in fp32 (|sums| <= 64 << 2^24), so the test is
-            # EXACT. Measured 46.9 s single-core of SWAR popcount at sf1.0
-            # (memory-bound: ~11 full-matrix passes) vs ~15 GFLOP/s BLAS —
-            # ~4x less kernel time. Tiny buckets keep the SWAR path (GEMM
-            # call overhead dominates below ~64 rows).
-            use_gemm = m >= 64
-            if use_gemm:
-                pm1 = np.where(
-                    ((g_fp[:, None] >> bit_cols) & np.uint64(1)).astype(bool),
-                    np.float32(1), np.float32(-1))
-                s_min = np.float32(64 - 2 * max_hamming)
+            # Hamming via a ±1 GEMM: unpack each fingerprint to a ±1 float32
+            # row; dot(a,b) = 64 - 2*hamming, integer-valued in fp32
+            # (|sums| <= 64 << 2^24), so the test is EXACT. Measured 46.9 s
+            # single-core of SWAR popcount at sf1.0 (memory-bound: ~11
+            # full-matrix passes) vs ~15 GFLOP/s BLAS — ~4x less kernel time.
+            # Tiny buckets take the GEMM too: the kernel timed alone at
+            # sf0.1 on a 4-core host (8 partitions, 5 reps) ran 0.20-0.24 s
+            # vs 0.22-0.26 s with a SWAR path for buckets under 64 rows,
+            # same 91,845 pairs.
+            pm1 = np.where(
+                ((g_fp[:, None] >> bit_cols) & np.uint64(1)).astype(bool),
+                np.float32(1), np.float32(-1))
             for i0 in range(0, m, block):
                 i1 = min(i0 + block, m)
                 # upper triangle only: row i is compared against j > i, so
                 # the block spans columns i0+1..
-                if use_gemm:
-                    S = pm1[i0:i1] @ pm1[i0 + 1:].T
-                    hit = S >= s_min
-                else:
-                    tail = g_fp[i0 + 1:]
-                    h = _popcount64(g_fp[i0:i1, None] ^ tail[None, :])
-                    hit = h <= max_hamming
+                S = pm1[i0:i1] @ pm1[i0 + 1:].T
+                hit = S >= s_min
                 # mask j <= i within the block's own triangle
                 r = np.arange(i1 - i0)
                 hit &= np.arange(i0 + 1, m)[None, :] > (i0 + r)[:, None]
@@ -758,28 +599,18 @@ def _make_simhash_verify_kernel(n_chunks: int, widths: list[int],
                 if not len(bi):
                     continue
                 gi, gj = i0 + bi, i0 + 1 + bj
-                fa, fb = g_fp[gi], g_fp[gj]
-                x = fa ^ fb
-                # canonical check: the pair agrees on this bucket's chunk(s)
-                # by construction; it is canonical iff NO chunk before kc1
-                # agrees, and (multi-index) no chunk strictly between kc1 and
-                # kc2 agrees — i.e. the lexicographically-first agreeing
-                # chunk(-pair) is exactly this key. Only chunks < kc2 are
-                # ever tested (~half the full agreement matrix).
+                x = g_fp[gi] ^ g_fp[gj]
+                # canonical check: the pair agrees on this bucket's chunk by
+                # construction; it is canonical iff NO earlier chunk agrees
                 keep = np.ones(len(gi), dtype=bool)
-                for c in range(kc1 if kc2 is None else kc2):
-                    if c == kc1:
-                        continue
+                for c in range(key):
                     keep &= ((x >> offs[c]) & masks[c]) != 0
                 if not keep.any():
                     continue
                 ia, ib = g_ids[gi[keep]], g_ids[gj[keep]]
                 out_a.append(np.minimum(ia, ib))
                 out_b.append(np.maximum(ia, ib))
-                if use_gemm:
-                    ham = ((64.0 - S[bi[keep], bj[keep]]) * 0.5)
-                else:
-                    ham = h[bi[keep], bj[keep]]
+                ham = (64.0 - S[bi[keep], bj[keep]]) * 0.5
                 out_h.append(ham.astype(np.int32))
         if out_a:
             yield pa.RecordBatch.from_arrays(
@@ -792,73 +623,32 @@ def _make_simhash_verify_kernel(n_chunks: int, widths: list[int],
 
 
 def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
-                       text_col: str = "text", id_col: str = "doc_id",
-                       n_chunks: int | None = None,
-                       agree_chunks: int | None = None,
-                       pack: int = 2) -> DataFrame:
+                       text_col: str = "text",
+                       id_col: str = "doc_id") -> DataFrame:
     """Near-dup candidates: block on simhash bit-chunks, verify exact Hamming.
 
     Pigeonhole recall guarantee: a pair within Hamming distance h differs in
-    at most h chunks, so with n_chunks = h + agree_chunks blocks it MUST
-    agree on >= agree_chunks of them — blocking is lossless at the requested
-    distance (n_chunks is derived from max_hamming by default; overriding it
-    below max_hamming + agree_chunks silently drops recall, so it is
-    clamped up).
+    at most h chunks, so with h + 1 chunks it MUST agree on at least one of
+    them — single-chunk blocking is lossless at the requested distance.
 
-    agree_chunks=2 is the multi-index refinement (the Gong/Manku style
-    generalization): block on every PAIR of chunks jointly. Keys are twice
-    as wide — C(h+2, 2) keys/doc of ~2w bits instead of h+1 keys of w bits —
-    so random-collision candidates drop by ~2^w while recall stays
-    guaranteed by the same pigeonhole argument (sf0.1/h=8: ~880k candidate
-    pairs -> ~a few k). agree_chunks=1 is the classic single-chunk blocking
-    (coarser keys but (h+2)x fewer exploded rows — faster when the explode
-    dominates). Default (None) auto-selects by corpus size at the
-    _SIMHASH_MULTI_INDEX_MIN_DOCS crossover; a bare-scan input is counted
-    directly (cheap column-less pass), a derived input counts the persisted
-    fingerprint table (one job that doubles as the cache warm-up) — never
-    an eager pass over a derived raw lineage.
-
-    WIDE blocking on purpose (unlike minhash_lsh_pairs' narrow option): the
-    fingerprint is ONE long — 8 bytes riding the chunk explode and the
-    candidate rows, ~45 x 8 B/doc worst case. A narrow (id, chunk, cv) shape
-    would save those bytes but pay two extra by-id join-back shuffles for
-    the Hamming verify; the payload never dominates at any corpus size, so
-    wide is the right shape at 100 TB too (contrast: the 512-byte minhash
-    signature DOES dominate — that operator offers narrow=True)."""
-    s = simhash(df, text_col, id_col, pack=pack)
-    cached: list[DataFrame] = []
-    if agree_chunks is None:
-        n_docs = _cheap_count(df)
-        if n_docs is None:
-            s = s.persist()
-            cached.append(s)
-            n_docs = s.count()
-        agree_chunks = 2 if n_docs > _SIMHASH_MULTI_INDEX_MIN_DOCS else 1
-    n_chunks = max(n_chunks or 0, max_hamming + agree_chunks)
-    base, rem = divmod(64, n_chunks)
-    widths = [base + 1 if c < rem else base for c in range(n_chunks)]
-    offsets = [sum(widths[:c]) for c in range(n_chunks)]
+    WIDE blocking on purpose: the fingerprint is ONE long — 8 bytes riding
+    the chunk explode, (h+1) x 8 B/doc. An id-only (id, chunk, cv) shape would
+    save those bytes but pay two extra by-id join-back shuffles for the
+    Hamming verify; the payload never dominates at any corpus size."""
+    s = simhash(df, text_col, id_col)
+    chunks = max_hamming + 1
+    base, rem = divmod(64, chunks)
+    widths = [base + 1 if c < rem else base for c in range(chunks)]
+    offsets = [sum(widths[:c]) for c in range(chunks)]
 
     def cv(c):
         return (F.shiftright("simhash", offsets[c])
                 .bitwiseAND(F.lit((1 << widths[c]) - 1)))
 
-    if agree_chunks == 2:
-        entries = [
-            F.struct(
-                F.lit(c1 * n_chunks + c2).alias("chunk"),
-                (cv(c1).cast("long") * F.lit(1 << widths[c2]).cast("long")
-                 + cv(c2).cast("long")).alias("cv"),
-            )
-            for c1 in range(n_chunks) for c2 in range(c1 + 1, n_chunks)
-        ]
-    elif agree_chunks == 1:
-        entries = [
-            F.struct(F.lit(c).alias("chunk"), cv(c).cast("long").alias("cv"))
-            for c in range(n_chunks)
-        ]
-    else:
-        raise ValueError("agree_chunks must be 1 or 2")
+    entries = [
+        F.struct(F.lit(c).alias("chunk"), cv(c).cast("long").alias("cv"))
+        for c in range(chunks)
+    ]
     # ONE exchange: hash-partition the exploded blocking rows by key so each
     # bucket's pairwise verify runs in a single task's vectorized kernel.
     # The previous shape — a per-key JVM self-join + a global dropDuplicates
@@ -866,17 +656,15 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
     # 1.09e9 joined rows at sf1.0, max bucket 16,500 docs: skewed fingerprint
     # bits make blocking keys collide far above the uniform estimate, and
     # AQE cannot split a single hot key). The kernel does the identical
-    # per-bucket O(m²) Hamming work as a blockwise numpy XOR+popcount
-    # (guide §4.2: batch-vectorized native code beats row-at-a-time join
-    # evaluation ~100x) and its canonical-key emission makes the dedup
-    # shuffle unnecessary (each pair emitted by exactly one bucket).
+    # per-bucket O(m²) Hamming work as a blockwise GEMM (batch-vectorized
+    # native code beats row-at-a-time join evaluation ~100x) and its
+    # canonical-key emission makes the dedup shuffle
+    # unnecessary (each pair emitted by exactly one bucket).
     chunked = s.select(
         "id", "simhash",
         F.explode(F.array(*entries)).alias("ch"),
     ).select("id", "simhash", "ch.chunk", "ch.cv")
     n_part = max(8, df.sparkSession.sparkContext.defaultParallelism * 2)
-    kernel = _make_simhash_verify_kernel(
-        n_chunks, widths, offsets, agree_chunks, max_hamming)
-    out = (chunked.repartition(n_part, "chunk", "cv")
-           .mapInArrow(kernel, schema="id_a long, id_b long, hamming int"))
-    return release_on_gc(out, *cached) if cached else out
+    kernel = _make_simhash_verify_kernel(widths, offsets, max_hamming)
+    return (chunked.repartition(n_part, "chunk", "cv")
+            .mapInArrow(kernel, schema="id_a long, id_b long, hamming int"))

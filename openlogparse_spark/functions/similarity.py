@@ -1,17 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
-  - brute-force cosine top-k: exact baseline. The query set is broadcast; the
+One plan per operator:
+  - cosine_topk: exact brute-force top-k. The query set is broadcast; the
     corpus is scanned once; dot products are pure column algebra
     (F.aggregate/zip_with, JVM-side fold — no Python). At 100 TB this is a
     single map stage + a tiny per-query shuffle of k rows per partition
     (window over query_id after a partial top-k).
-  - OR-amplified random-hyperplane LSH (Charikar '02; amplification per
-    Leskovec et al., MMDS ch.3): L independent hash tables of n_planes
-    sign-bits each; a pair is a candidate if it collides in ANY table
-    (P[candidate] = 1 - (1 - s^n)^L for angular similarity s). Candidates are
-    exactly re-ranked. The scale path when the corpus is too large to scan
-    per query batch: each table is a hash-bucketed join, never a full scan.
+  - lsh_cosine_topk: OR-amplified random-hyperplane LSH (Charikar '02;
+    amplification per Leskovec et al., MMDS ch.3): L independent hash
+    tables of n_planes sign-bits each over NARROW (id, tbl, bucket) rows
+    from hyperplane_buckets; a pair is a candidate if it collides in ANY
+    table (P[candidate] = 1 - (1 - s^n)^L for angular similarity s).
+    Candidates are exactly re-ranked.
+  - ivf_topk: coarse-quantizer inverted lists, exact re-rank.
+  - cosine_near_pairs: method='brute' is the full self-join; method='lsh'
+    scores bucket blocks with a broadcast GEMM kernel, with the bucket
+    self-join plan only above the _GATHER_KERNEL_MAX_VECTORS size guard.
 
 All plane math is array-based (`transform`/`zip_with`/`aggregate` over the
 vector), NOT per-component unrolled expressions — at dim 768/1024 an unrolled
@@ -19,7 +23,8 @@ form is n_planes x dim scalar expressions and breaks whole-stage codegen;
 the array form stays one expression regardless of dim.
 
 Embeddings in the test tables are L2-normalized, so cosine == dot product;
-`cosine_topk` still normalizes defensively unless told not to.
+the operators still normalize defensively unless told not to. A zero-norm
+vector has no cosine: it scores NULL and never pairs or ranks.
 """
 
 from __future__ import annotations
@@ -44,6 +49,26 @@ def _norm(a):
         F.lit(0.0), lambda acc, x: acc + x))
 
 
+def _cosine(a, b, normalized: bool):
+    """a·b, divided by |a||b| unless the inputs are unit vectors. try_divide:
+    a zero-norm side scores NULL instead of raising DIVIDE_BY_ZERO under
+    ANSI mode; NULL never clears a threshold and _top_k drops it."""
+    dot = _dot(a, b)
+    return dot if normalized else F.try_divide(dot, _norm(a) * _norm(b))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, score): the k best non-NULL scores per
+    query; deterministic tie-break on neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (
+        scored.filter(F.col("score").isNotNull())
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "score")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -55,7 +80,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k: (query_id, neighbor_id, rank, score). Self-matches excluded.
 
-    Deterministic tie-break on neighbor_id."""
+    Deterministic tie-break on neighbor_id; zero-norm vectors never rank."""
     from openlogparse_spark.functions.dedup import _widen
 
     q = F.broadcast(queries.select(
@@ -63,19 +88,13 @@ def cosine_topk(
     # widen: the corpus x queries nested loop runs one task per corpus split
     c = _widen(corpus).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"))
-    dot = _dot(F.col("qvec"), F.col("cvec"))
-    score = dot if normalized else dot / (_norm(F.col("qvec")) * _norm(F.col("cvec")))
+    score = _cosine(F.col("qvec"), F.col("cvec"), normalized)
     scored = (
         c.join(q)  # broadcast nested-loop: corpus x queries
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", F.round(score, score_decimals).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _top_k(scored, k)
 
 
 def _bucket_expr(vec, dims, table, n_planes: int, seed: int):
@@ -146,50 +165,6 @@ def hyperplane_buckets(
         .select("id", F.col("s.tbl").alias("tbl"), F.col("s.bucket").alias("bucket"))
         .filter(F.col("tbl").isNotNull())
     )
-
-
-def hyperplane_signatures(
-    df: DataFrame,
-    n_planes: int = 8,
-    n_tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """(id, vec, tbl, bucket): one row per (vector, hash table), carrying the
-    vector for an immediate exact re-rank (see hyperplane_buckets for the
-    narrow variant used when the re-rank joins vectors back by id)."""
-    from openlogparse_spark.functions.dedup import _widen
-
-    df = _widen(df)   # same split-spreading rationale as hyperplane_buckets
-    base = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
-        F.sequence(F.lit(0), F.size(vec_col) - F.lit(1)).alias("__dims"),
-    )
-    tb = F.explode_outer(   # see hyperplane_buckets: inferred-filter trap
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n_tables - 1)),
-            lambda t: F.struct(
-                t.alias("tbl"),
-                _bucket_expr(F.col("vec"), F.col("__dims"), t,
-                             n_planes, seed).alias("bucket"),
-            ),
-        )
-    )
-    return (
-        base.select("id", "vec", tb.alias("s"))
-        .select("id", "vec", F.col("s.tbl").alias("tbl"), F.col("s.bucket").alias("bucket"))
-        .filter(F.col("tbl").isNotNull())
-    )
-
-
-def hyperplane_signature(df: DataFrame, n_planes: int = 16,
-                         id_col: str = "vec_id", vec_col: str = "embedding",
-                         seed: int = 42) -> DataFrame:
-    """Single-table signature (id, vec, bucket) — the L=1 special case."""
-    return hyperplane_signatures(
-        df, n_planes=n_planes, n_tables=1, id_col=id_col, vec_col=vec_col, seed=seed
-    ).drop("tbl")
 
 
 def auto_n_planes(n_vectors: int, threshold: float, n_tables: int = 8,
@@ -337,7 +312,7 @@ def _lsh_block_pairs(df: DataFrame, mat, n_planes: int, n_tables: int,
                 .join(F.broadcast(norms.select(F.col("nid").alias("id_b"),
                                                F.col("nrm").alias("nb"))),
                       "id_b"))
-        score = F.col("dot") / (F.col("na") * F.col("nb"))
+        score = F.try_divide(F.col("dot"), F.col("na") * F.col("nb"))
     return (dots.select("id_a", "id_b", F.round(score, 4).alias("score"))
             .filter(F.col("score") >= threshold)
             .dropDuplicates(["id_a", "id_b"]))
@@ -380,23 +355,21 @@ def cosine_near_pairs(df: DataFrame, threshold: float = 0.9,
     buckets (multi-probe), then exact verification on vectors joined back by
     id — same sizing rules and scale rationale as lsh_cosine_topk."""
     sig = None
-    n = None
     if method == "brute":
         a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
         b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
         cand = a.join(b, F.col("id_a") < F.col("id_b"))
     else:
-        if n_planes is None:
-            # auto-size from threshold + corpus count — but ONLY when the
-            # input is a bare scan (± filter/project), where the count is one
-            # cheap columnar pass. On a derived lineage an eager count here
-            # would silently execute the whole upstream plan outside any
-            # cache (the round-3 trap jaccard/simhash/ivf were cured of), so
-            # demand an explicit n_planes instead — same error contract as
-            # ivf_topk's n_centroids.
-            from openlogparse_spark.functions.dedup import _cheap_count
+        from openlogparse_spark.functions.dedup import _cheap_count
 
-            n = _cheap_count(df.select(id_col))
+        # one corpus count, ONLY when the input is a bare scan (±
+        # filter/project), where it is one cheap columnar pass. On a derived
+        # lineage an eager count would silently execute the whole upstream
+        # plan outside any cache (the round-3 trap jaccard/ivf were cured of).
+        n = _cheap_count(df.select(id_col))
+        if n_planes is None:
+            # auto-size from threshold + corpus count; a derived input must
+            # pass n_planes — same error contract as ivf_topk's n_centroids
             if n is None:
                 raise ValueError(
                     "cosine_near_pairs(method='lsh'): input is a derived "
@@ -411,10 +384,6 @@ def cosine_near_pairs(df: DataFrame, threshold: float = 0.9,
         # bucket-block GEMM kernel scores every (exact, Hamming-1) bucket
         # pair in place and only above-threshold survivors leave the tasks.
         mat = None
-        if n is None:
-            from openlogparse_spark.functions.dedup import _cheap_count
-
-            n = _cheap_count(df.select(id_col))
         if n is not None and n <= _GATHER_KERNEL_MAX_VECTORS:
             mat = _collect_vector_matrix(df, id_col, vec_col)
         if mat is not None:
@@ -441,8 +410,8 @@ def cosine_near_pairs(df: DataFrame, threshold: float = 0.9,
                                F.col("__v").alias("va")), "id_a")
                 .join(v.select(F.col("__vid").alias("id_b"),
                                F.col("__v").alias("vb")), "id_b"))
-    dot = _dot(F.col("va"), F.col("vb"))
-    score = dot if normalized else dot / (_norm(F.col("va")) * _norm(F.col("vb")))
+    score = _cosine(F.col("va"), F.col("vb"), normalized)
+    # a NULL (zero-norm) score never clears the threshold
     out = (cand.select("id_a", "id_b", F.round(score, 4).alias("score"))
            .filter(F.col("score") >= threshold))
     if sig is not None:
@@ -540,16 +509,9 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             .join(F.broadcast(qslim.select(F.col("id").alias("query_id"),
                                            F.col("vec").alias("qvec"))),
                   "query_id"))
-    dot = _dot(F.col("qvec"), F.col("vec"))
-    score = dot if normalized else dot / (_norm(F.col("qvec")) * _norm(F.col("vec")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", F.col("id").alias("neighbor_id"),
-                    F.round(score, 4).alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    score = _cosine(F.col("qvec"), F.col("vec"), normalized)
+    return _top_k(cand.select("query_id", F.col("id").alias("neighbor_id"),
+                              F.round(score, 4).alias("score")), k)
 
 
 def lsh_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -603,13 +565,6 @@ def lsh_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     qvec = queries.select(F.col(id_col).alias("query_id"),
                           F.col(vec_col).alias("qvec"))
     cand = cand.join(cvec, "id").join(F.broadcast(qvec), "query_id")
-    dot = _dot(F.col("qvec"), F.col("vec"))
-    score = dot if normalized else dot / (_norm(F.col("qvec")) * _norm(F.col("vec")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", F.col("id").alias("neighbor_id"),
-                    F.round(score, 4).alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    score = _cosine(F.col("qvec"), F.col("vec"), normalized)
+    return _top_k(cand.select("query_id", F.col("id").alias("neighbor_id"),
+                              F.round(score, 4).alias("score")), k)

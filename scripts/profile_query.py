@@ -35,8 +35,8 @@ def main() -> None:
     qs = entry_mod.queries()
     out = {}
     # Untimed SESSION WARMUP with a query that is NOT the one measured:
-    # measured (scripts/simhash_bisect.py + 11 probe sessions, BENCH/NOTES
-    # r5): a fresh session whose FIRST query is simhash_near_pairs can get
+    # measured (11 probe sessions, BENCH/NOTES "Round-5 simhash root
+    # cause"): a fresh session whose FIRST query is simhash_near_pairs can get
     # stuck at ~10-12 s on every run during some host phases (best-of-3
     # never recovers), while any session that ran jaccard_pairs first stays
     # at steady state (~3 s) — including inside the same hostile window.

@@ -84,10 +84,45 @@ def test_cosine_topk_exact(spark):
     assert res[0]["score"] <= 1.0
 
 
+def test_zero_norm_vector_never_pairs_or_ranks(spark, monkeypatch):
+    """A zero vector has no cosine: every scoring path skips it (NULL score)
+    instead of failing with DIVIDE_BY_ZERO under ANSI mode, and the other
+    vectors' answers are unchanged."""
+    from openlogparse_spark.functions import similarity as sim
+
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.9, 0.1, 0.0]),
+        (2, [0.0, 0.0, 0.0]),        # zero norm
+        (3, [0.95, 0.05, 0.0]),
+        (4, [0.0, 1.0, 0.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def pairs(df):
+        return {(r["id_a"], r["id_b"]) for r in df.collect()}
+
+    want = {(0, 1), (0, 3), (1, 3)}
+    assert pairs(sim.cosine_near_pairs(emb, 0.5, method="brute")) == want
+    assert pairs(sim.cosine_near_pairs(emb, 0.5, method="lsh")) == want
+    monkeypatch.setattr(sim, "_GATHER_KERNEL_MAX_VECTORS", -1)  # join plan
+    assert pairs(sim.cosine_near_pairs(emb, 0.5, method="lsh")) == want
+    q = emb.filter("vec_id IN (0, 2)")
+    exact = sim.cosine_topk(emb, q, k=3).collect()
+    # probing every cell makes IVF exhaustive
+    ivf = sim.ivf_topk(emb, q, k=3, n_centroids=2, n_probe=2).collect()
+    approx = sim.lsh_cosine_topk(emb, q, k=3).collect()
+    for topk in (exact, ivf, approx):
+        assert all(2 not in (r["query_id"], r["neighbor_id"]) for r in topk)
+    for topk in (exact, ivf):
+        assert sorted(r["neighbor_id"] for r in topk) == [1, 3, 4]
+    assert {1, 3} <= {r["neighbor_id"] for r in approx} <= {1, 3, 4}
+
+
 def test_simhash_blocking_is_lossless_at_h8(spark):
     """Brute-force oracle at the DRIVER parameters (max_hamming=8): blocking
-    with n_chunks = h+1 must return exactly the pairs a full O(n²) scan
-    finds — the pigeonhole guarantee, asserted as set equality."""
+    on h+1 chunks must return exactly the pairs a full O(n²) scan finds —
+    the pigeonhole guarantee, asserted as set equality."""
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     s = {r["id"]: r["simhash"] for r in simhash(docs).collect()}
     ids = sorted(s)
@@ -100,50 +135,22 @@ def test_simhash_blocking_is_lossless_at_h8(spark):
                for r in simhash_near_pairs(docs, max_hamming=8).collect()}
     assert blocked == brute
     assert len(brute) > 0  # corpus actually exercises the path
-    # BOTH explicit blocking modes must return the identical set — the
-    # classic single-chunk and the multi-index (chunk-pair) blocking are
-    # each pigeonhole-lossless (the default auto-selects between them by
-    # corpus size, so neither mode is covered by the default alone)
-    for ac in (1, 2):
-        mode = {(r["id_a"], r["id_b"]): r["hamming"]
-                for r in simhash_near_pairs(docs, max_hamming=8,
-                                            agree_chunks=ac).collect()}
-        assert mode == brute, f"agree_chunks={ac}"
 
 
-def test_simhash_auto_selects_blocking_mode(spark, docs, monkeypatch):
-    """agree_chunks=None picks single-chunk below the corpus-size crossover
-    and chunk-pair above it; both sides of the switch give the same answer."""
-    from openlogparse_spark.functions import dedup as dd
-
-    explicit1 = {(r["id_a"], r["id_b"]) for r in
-                 simhash_near_pairs(docs, max_hamming=3, agree_chunks=1).collect()}
-    auto_small = {(r["id_a"], r["id_b"]) for r in
-                  simhash_near_pairs(docs, max_hamming=3).collect()}
-    assert auto_small == explicit1
-    # drop the crossover to 0: auto now selects the multi-index mode
-    monkeypatch.setattr(dd, "_SIMHASH_MULTI_INDEX_MIN_DOCS", 0)
-    auto_large = {(r["id_a"], r["id_b"]) for r in
-                  simhash_near_pairs(docs, max_hamming=3).collect()}
-    assert auto_large == explicit1   # mode switch never changes the answer
-
-
-def test_minhash_narrow_shape_and_mode_equality(spark, docs):
-    """narrow=True (the 100 TB shape): the band self-join exchanges carry
-    only (id, band, bh) — never the 64-long signature, which joins back by
-    id only for surviving candidates (round-3 verdict item: KB-scale vs
-    sig-payload shuffle). And the two shapes are the same operator: wide
-    (small-corpus default) and narrow return identical pairs."""
-    mh = minhash_lsh_pairs(docs, threshold=0.5, narrow=True)
-    plan = mh._jdf.queryExecution().executedPlan().toString()
-    for line in plan.splitlines():
-        if "hashpartitioning(band" in line or "hashpartitioning(bh" in line:
-            assert "sig" not in line, line
-    rows = lambda df: {(r["id_a"], r["id_b"], r["est_jaccard"])  # noqa: E731
-                       for r in df.collect()}
-    assert rows(mh) == rows(minhash_lsh_pairs(docs, threshold=0.5, narrow=False))
-    # auto (None) picks one of the two — tiny corpus -> wide — same answer
-    assert rows(mh) == rows(minhash_lsh_pairs(docs, threshold=0.5))
+def test_minhash_and_simhash_builds_run_no_jobs(spark, docs, tmp_path):
+    """Each operator has one plan, so building it over a bare parquet scan
+    needs no size probe: zero Spark jobs until the result is consumed."""
+    docs.write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    tracker = spark.sparkContext.statusTracker()
+    for build in (lambda: minhash_lsh_pairs(docs, threshold=0.3),
+                  lambda: simhash_near_pairs(docs, max_hamming=8)):
+        before = set(tracker.getJobIdsForGroup(None) or [])
+        res = build()
+        assert set(tracker.getJobIdsForGroup(None) or []) == before
+        assert res.count() > 0
+        if hasattr(res, "release_cached_inputs"):
+            res.release_cached_inputs()
 
 
 def test_jaccard_probe_goes_through_the_cache(spark):
@@ -326,10 +333,14 @@ def test_jaccard_index_kernel_matches_join_plan(spark, docs):
     jaccard — including when the df cap binds."""
     from openlogparse_spark.functions import dedup as dd
 
-    for cap in (10_000, 40):   # cap inert / cap binds (fixture max df > 40)
-        kern = {(r["id_a"], r["id_b"]): r["jaccard"]
-                for r in jaccard_pairs(docs, n=3, threshold=0.2,
-                                       max_shingle_df=cap).collect()}
+    # cap inert / cap binds: a cap at or above the 6-document count is
+    # dropped, so only cap=3 reaches the df join + re-size window plan
+    by_cap = {}
+    for cap in (10_000, 3):
+        kern = by_cap[cap] = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in jaccard_pairs(docs, n=3, threshold=0.2,
+                                   max_shingle_df=cap).collect()}
         old_lim = dd._JACCARD_INDEX_MAX_DOCS
         dd._JACCARD_INDEX_MAX_DOCS = -1   # force the self-join plan
         try:
@@ -339,7 +350,8 @@ def test_jaccard_index_kernel_matches_join_plan(spark, docs):
         finally:
             dd._JACCARD_INDEX_MAX_DOCS = old_lim
         assert kern == join, f"cap={cap}"
-    assert len(kern) > 0
+    assert len(by_cap[3]) > 0
+    assert by_cap[3] != by_cap[10_000]   # the cap really binds
 
 
 def test_cdc_changed_to_null_kept_in_wire_image(spark):
@@ -372,8 +384,9 @@ def test_jaccard_df_cap_guard(spark, docs):
     default_capped = {(r["id_a"], r["id_b"]): r["jaccard"]
                       for r in jaccard_pairs(docs, n=3, threshold=0.5).collect()}
     assert default_capped == exact
-    # a BINDING cap engages the hot-shingle literal plan: it may prune pairs
-    # whose overlap hides in the dropped ubiquitous shingles, never invent
+    # a BINDING cap (this 6-document bare scan takes the CSR kernel) may
+    # prune pairs whose overlap hides in the dropped ubiquitous shingles,
+    # never invent
     binding = {(r["id_a"], r["id_b"]): r["jaccard"]
                for r in jaccard_pairs(docs, n=3, threshold=0.5,
                                       max_shingle_df=2).collect()}
@@ -510,21 +523,6 @@ def test_multimodal_real_audio_kernel(spark):
     # synthetic_media's audio rows ride the same real kernel
     feats = extract_features(synthetic_media(spark, n=12)).collect()
     assert all(r["feat"] is not None for r in feats if r["kind"] == "audio")
-
-
-def test_simhash_pack_variants_are_bit_identical(spark):
-    """pack=2/4 rearrange the vote aggregation into fewer, packed buffers
-    (the codegen-size mitigation for the slow-JIT sessions, round-4 verdict
-    #2) — the resulting 64-bit signatures must be IDENTICAL to stock pack=1
-    on real fixture text."""
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    base = {r["id"]: r["simhash"] for r in simhash(docs).collect()}
-    assert base
-    for p in (2, 4):
-        got = {r["id"]: r["simhash"] for r in simhash(docs, pack=p).collect()}
-        assert got == base, f"pack={p} diverged"
-    with pytest.raises(ValueError, match="pack"):
-        simhash(docs, pack=3)
 
 
 def test_winnow_fingerprint_is_edit_local(spark):

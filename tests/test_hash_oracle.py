@@ -38,20 +38,33 @@ def test_minhash_signatures_match_pure_python(spark, fx_dir):
         assert got[row["doc_id"]] == exp, row["doc_id"]
 
 
+def _simhash_py(text: str) -> int | None:
+    toks = [t for t in _norm_py(text).split(" ") if t]
+    if not toks:
+        return None   # no tokens: no vote row, the document has no simhash
+    votes = [0] * 64
+    for tok in toks:
+        h = spark_xxhash64_str(tok) & ((1 << 64) - 1)
+        for b in range(64):
+            votes[b] += 1 if (h >> b) & 1 else -1
+    exp = sum((1 << b) for b in range(64) if votes[b] > 0)
+    return exp - (1 << 64) if exp >= (1 << 63) else exp
+
+
 def test_simhash_matches_pure_python(spark):
+    """Hand-written edge rows plus the 40-document real-text slice the
+    minhash oracle reads: pins the packed two-lane vote layout bit for bit."""
     rows = [(0, "the quick brown fox"), (1, "pack my box with five dozen jugs"),
             (2, "a b a b repeated tokens a b"), (3, "single")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["id"]: r["simhash"] for r in simhash(df).collect()}
-    for doc_id, text in rows:
-        votes = [0] * 64
-        for tok in _norm_py(text).split(" "):
-            h = spark_xxhash64_str(tok) & ((1 << 64) - 1)
-            for b in range(64):
-                votes[b] += 1 if (h >> b) & 1 else -1
-        exp = sum((1 << b) for b in range(64) if votes[b] > 0)
-        exp = exp - (1 << 64) if exp >= (1 << 63) else exp
-        assert got[doc_id] == exp, doc_id
+    hand = spark.createDataFrame(rows, "doc_id long, text string")
+    real = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+            .limit(40))
+    for df, n_docs in ((hand, 4), (real, 40)):
+        pdf = df.toPandas()
+        got = {r["id"]: r["simhash"] for r in simhash(df).collect()}
+        assert len(pdf) == n_docs
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            assert got.get(doc_id) == _simhash_py(text), doc_id
 
 
 def test_lsh_bucket_hash_matches_pure_python(spark):
