@@ -53,6 +53,7 @@ def main(argv=None) -> int:
             cfgd = json.load(f)
 
     from openlogparse_spark.pipeline import PipelineConfig, run_pipeline
+    from openlogparse_spark.route.router import footer_count
     from openlogparse_spark.session import get_spark
 
     master = f"local[{args.cpus}]" if args.cpus else None
@@ -72,7 +73,7 @@ def main(argv=None) -> int:
     t0 = time.time()
     res = run_pipeline(spark, PipelineConfig(**kw))
     wall = time.time() - t0
-    n = spark.read.parquet(kw["input_path"]).count()
+    n = footer_count(kw["input_path"])
     print(json.dumps({
         "run_id": res.run_id,
         "wall_sec": round(wall, 2),

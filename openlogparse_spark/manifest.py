@@ -222,7 +222,7 @@ class Manifest:
 
 
 def atomic_overwrite(df, path: str, partition_by: list[str] | None = None,
-                     committer=None, max_records_per_file: int | None = None) -> None:
+                     committer=None) -> None:
     """Write a DataFrame to `path` with snapshot-commit semantics.
 
     Spark writes into `<path>.__tmp__`, then the configured Committer (see
@@ -242,9 +242,5 @@ def atomic_overwrite(df, path: str, partition_by: list[str] | None = None,
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    if max_records_per_file:
-        # file rotation (WriterFile max-file-size analogue): Spark rolls to a
-        # new file when a task's output hits the cap
-        w = w.option("maxRecordsPerFile", max_records_per_file)
     w.parquet(tmp)
     committer.commit(tmp, path)

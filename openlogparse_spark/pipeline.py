@@ -29,7 +29,7 @@ from openlogparse_spark.enrich import enrich_stage
 from openlogparse_spark.manifest import Manifest, atomic_overwrite, _dir_bytes
 from openlogparse_spark.parse import parse_stage
 from openlogparse_spark.route import route_stage
-from openlogparse_spark.route.router import safe_count
+from openlogparse_spark.route.router import footer_count, read_routes
 
 
 # input-table contract: column -> acceptable Spark types (the "file header"
@@ -125,8 +125,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
         transcripts = transcripts.filter(F.expr(cfg.input_filter))
     dim_tools = spark.read.parquet(os.path.join(cfg.dims_dir, "dim_tools.parquet"))
     dim_roles = spark.read.parquet(os.path.join(cfg.dims_dir, "dim_roles.parquet"))
-    routes_pdf = spark.read.parquet(os.path.join(cfg.dims_dir, "routes.parquet")).toPandas()
-    routes = routes_pdf.to_dict("records")
+    routes = read_routes(cfg.dims_dir)
 
     enriched_path = os.path.join(cfg.output_root, "enriched")
     parse_requested = "parse" in cfg.stages or "enrich" in cfg.stages
@@ -179,7 +178,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
                 atomic_overwrite(enriched, enriched_path)
                 masked.unpersist()
                 masked = None
-                rows = safe_count(spark, enriched_path)
+                rows = footer_count(enriched_path)
                 man.record(cfg.run_id, "enrich", enriched_path, rows,
                            _dir_bytes(enriched_path), started=t0)
             timings["parse_enrich"] = time.time() - t0
@@ -259,7 +258,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
                     return
                 atomic_overwrite(df, path)
                 man.record(cfg.run_id, "aggregate", path,
-                           safe_count(spark, path), _dir_bytes(path))
+                           footer_count(path), _dir_bytes(path))
 
             for name, df in (
                 ("agg_hourly", agg_hourly(enriched)),

@@ -1,21 +1,28 @@
-"""Route stage: condition-filtered fan-out writes with salted repartitioning.
+"""Route stage: the one owner of routing and of sink row counts.
+
+One scan tags every row with the ids of the routes it matches, and one
+partitioned write lands every parquet sink; the exchange under that write is
+picked by one cost rule (see `route_stage`). Row counts of every committed
+sink — routes, the staged `enriched` table, aggregates, merged outputs — come
+from parquet footers (`footer_count`), never from a Spark job.
 
 Reference parity:
   - table filter (owner/table regex dropping rows at parse time):
-    /root/reference/src/OpenLogReplicator.cpp:775-826 and
+    reference src/OpenLogReplicator.cpp:775-826 and
     src/parser/Parser.cpp:666-674 → here a regex over the mined template
     string, pushed into the scan of the staged `enriched` table;
   - row condition DSL (==/!=/&&/||/! over op + session attributes, evaluated
-    per row pre-emit): /root/reference/src/common/expression/Expression.cpp:27-279,
+    per row pre-emit): reference src/common/expression/Expression.cpp:27-279,
     DbTable::matchesCondition src/common/DbTable.cpp:145-154 → here the
     condition is a **Spark SQL boolean expression**; Catalyst is the
     evaluation engine (constant-folded, codegen'd, pushed down);
   - fan-out sinks with per-sink counters and confirm watermarks:
-    src/writer/Writer*.cpp; counts recorded in the manifest replace the
-    confirmedScn/idx protocol (atomic rename commit = snapshot commit);
+    src/writer/Writer*.cpp, Metrics.h; counts taken from what was committed
+    and recorded in the manifest replace the confirmedScn/idx protocol
+    (atomic rename commit = snapshot commit);
   - tag/routing key (per-table `tag` config used as partition key):
-    src/metadata/SchemaElement.h:63-82 → `tag_cols` + salt become the
-    repartition key.
+    src/metadata/SchemaElement.h:63-82 → `route_id` + salt become the
+    repartition key when the write takes the exchange.
 
 Skew handling (reference has none — single host; SURVEY.md §4): one viral
 conversation can dominate a sink write. We salt deterministically by
@@ -36,29 +43,67 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+import pandas as pd
+
 from openlogparse_spark.manifest import Manifest, atomic_overwrite, _dir_bytes
 from openlogparse_spark.route.committer import DEFAULT_COMMITTER
 
 SALT_BLOCK_TURNS = 256   # turns per salt block within one conversation
 DEFAULT_SALT_BUCKETS = 64
-# reshuffle='auto' file-budget estimate: the partitioning-reuse write makes
-# ~upstream_partitions x live (route,template) files; live templates per
-# route aren't knowable without a scan, so the estimate uses this heuristic
-# (the fixture domain averages ~5; 8 errs toward reshuffling early)
+# exchange rule: the partitioning-reuse write makes ~upstream_partitions x
+# live (route,template) files; live templates per route aren't knowable
+# without a scan, so the estimate uses this heuristic (the fixture domain
+# averages ~5; 8 errs toward reshuffling early). Above FILE_BUDGET estimated
+# files the write takes the salted exchange instead.
 EST_TEMPLATES_PER_ROUTE = 8
-DEFAULT_FILE_BUDGET = 4096
+FILE_BUDGET = 4096
 
 
-def safe_count(spark, path: str) -> int:
-    """Parquet-footer row count; 0 for an empty sink (no data files inside).
+def read_routes(dims_dir: str) -> list[dict]:
+    """The route table (`routes.parquet` under `dims_dir`) as one dict per
+    route. A driver-side pandas read — no Spark job — and never cached, so
+    an edited table is seen by the next caller (the next micro-batch of a
+    stream)."""
+    return pd.read_parquet(os.path.join(dims_dir, "routes.parquet")).to_dict("records")
 
-    Only the no-data-files case maps to 0 — a committed sink that exists but
-    fails to READ is a real error and must propagate, so the stage re-runs
+
+def _footers(files: list[str], ts_col: str | None = "ts"
+             ) -> list[tuple[int, object]]:
+    """(rows, max `ts_col` value) per parquet file, from its footer alone —
+    driver-side metadata reads (~0.3 ms/file), threaded. The max comes from
+    row-group column statistics, so the per-sink event-time watermark
+    (reference confirmedScn progression) costs zero data reads. A file whose
+    footer cannot be read raises."""
+    import pyarrow.parquet as pq
+
+    def one(f: str):
+        md = pq.ParquetFile(f).metadata
+        wm = None
+        if ts_col in md.schema.names:
+            ci = md.schema.names.index(ts_col)
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(ci).statistics
+                if st is not None and st.has_min_max:
+                    wm = st.max if wm is None else max(wm, st.max)
+        return md.num_rows, wm
+
+    if not files:
+        return []
+    with ThreadPoolExecutor(max_workers=min(16, len(files))) as pool:
+        return list(pool.map(one, files))
+
+
+def footer_count(path: str) -> int:
+    """Row count of a committed parquet table (a file or a directory tree)
+    from its file footers — no Spark job.
+
+    Only the no-data-files case maps to 0 (an empty sink). A data file that
+    fails to read is a real error and propagates, so the stage re-runs
     instead of being recorded done with rows=0 (resume would then skip a
     corrupt sink forever)."""
-    if not glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
-        return 0
-    return spark.read.parquet(path).count()
+    files = ([path] if os.path.isfile(path) else
+             glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+    return sum(n for n, _wm in _footers(files, ts_col=None))
 
 
 def add_salt(df: DataFrame, buckets: int = DEFAULT_SALT_BUCKETS,
@@ -109,6 +154,17 @@ def compile_route_filter(template_pattern: str, condition: str):
     return _pattern_expr(template_pattern) & cond
 
 
+def route_tags(routes: list[dict]):
+    """Array column of the ids of every route a row matches (one Catalyst
+    expression per route); explode it to fan a row out to all its routes."""
+    tags = F.array(*[
+        F.when(compile_route_filter(r["template_pattern"], r["condition"]),
+               F.lit(r["route_id"]))
+        for r in routes
+    ])
+    return F.filter(tags, lambda x: x.isNotNull())
+
+
 def route_stage(
     enriched: DataFrame,
     routes: list[dict],
@@ -116,92 +172,149 @@ def route_stage(
     manifest: Manifest | None = None,
     run_id: str = "run0",
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    shuffle_partitions: int | None = None,
-    strategy: str = "unified",
+    *,
     committer=None,
     timings: dict | None = None,
-    reshuffle: bool | str = "auto",
-    file_budget: int = DEFAULT_FILE_BUDGET,
     max_records_per_file: int | None = None,
     upstream_partitions: int | None = None,
 ) -> dict[str, int]:
     """Fan out `enriched` to one sink per route; returns {route_id: rows}.
 
-    strategy='unified' (default, the 100 TB path): ONE scan computes every
-    route's match set (array of matching route ids → explode) and ONE write
-    lands partitionBy(route_id, template_id); each route_id=… directory is
-    then atomically moved into place as that route's sink — byte-layout
-    identical to per-sink writes, at 1/N_routes the scan cost. (The
-    reference writes each message once into one writer per pipeline; this is
-    the multi-sink generalization.) reshuffle=False REUSES the upstream
-    conv-clustered partitioning — zero extra exchanges; reshuffle=True
-    inserts a salted repartition for file-count control / hot-conversation
-    spreading when upstream task count is huge; reshuffle='auto' (default)
-    picks: reuse while the estimated file count (upstream partitions x
-    routes x EST_TEMPLATES_PER_ROUTE) stays under `file_budget`, reshuffle
-    beyond it — so a caller with a 10k-task upstream can't silently produce
-    millions of small files.
+    ONE scan computes every route's match set (array of matching route ids
+    → explode) and ONE write lands partitionBy(route_id, template_id); each
+    route_id=… directory is then atomically moved into place as that
+    route's sink — byte-layout identical to per-sink writes, at 1/N_routes
+    the scan cost. (The reference writes each message once into one writer
+    per pipeline; this is the multi-sink generalization.) Non-parquet routes
+    (`format` json/kafka) get their own writer each.
+
+    The exchange is chosen by one cost rule: the write REUSES the upstream
+    conv-clustered partitioning (zero extra exchanges) while the estimated
+    file count — upstream partitions x routes x EST_TEMPLATES_PER_ROUTE —
+    stays within FILE_BUDGET; beyond it a salted repartition bounds the file
+    count and spreads hot conversations, so a caller with a 10k-task
+    upstream can't silently produce millions of small files.
+    `upstream_partitions`: callers that KNOW their plan's final-stage
+    partition count (the pipeline does) pass it so the rule decides on the
+    real number instead of a conservative estimate.
 
     `max_records_per_file` caps rows per output file on every parquet sink
     (the reference WriterFile max-file-size / rotation-mode analogue,
-    /root/reference/src/writer/WriterFile.cpp:59-197) — Spark splits a
-    task's output into multiple files at the cap.
+    src/writer/WriterFile.cpp:59-197) — Spark splits a task's output into
+    multiple files at the cap.
 
-    `upstream_partitions`: callers that KNOW their plan's final-stage
-    partition count (e.g. the pipeline: its one-shot plan always ends at
-    the merge-window exchange = spark.sql.shuffle.partitions) pass it here
-    so reshuffle='auto' decides on the real number instead of the
-    conservative estimate.
-
-    strategy='fanout': one filtered write per route (N scans). Kept for
-    per-sink independent re-runs.
-
-    Both: filter pushed to scan → per-partition sort [stable-order
-    invariant: (conv_id, turn_idx) ascending within every file] → atomic
-    commit; per-sink counts from parquet footers (metadata-only); done sinks
-    skipped (resume).
+    Rows are sorted per partition [stable-order invariant: (conv_id,
+    turn_idx) ascending within every file] → atomic commit per sink;
+    per-sink counts come from parquet footers (metadata-only); sinks the
+    manifest records done are skipped (resume), so re-running a subset of
+    sinks works.
     """
-    if strategy == "unified":
-        return _route_unified(enriched, routes, sinks_root, manifest, run_id,
-                              salt_buckets, shuffle_partitions, committer,
-                              timings, reshuffle, file_budget,
-                              max_records_per_file, upstream_partitions)
+    committer = committer or DEFAULT_COMMITTER
     done = manifest.done("route") if manifest else set()
+    recorded = manifest.counts_by_sink() if done else {}
     counts: dict[str, int] = {}
-    salted = add_salt(enriched, salt_buckets)
-    for r in routes:  # strategy='fanout'
+    t0 = time.time()
+
+    todo, special = [], []
+    for r in routes:
         sink_path = os.path.join(sinks_root, r["sink"])
         if sink_path in done:
-            counts[r["route_id"]] = (manifest.counts_by_sink().get(("route", sink_path), 0)
-                                     if manifest else 0)
-            continue
-        t0 = time.time()
-        matched = salted.filter(
-            compile_route_filter(r["template_pattern"], r["condition"])
-        )
-        n_out = shuffle_partitions or salt_buckets
-        # routing key = the route's tag projection (reference: per-table tag
-        # config, SchemaElement.h:63-82) + skew salt; falls back to
-        # template_id when the route declares no tags
-        tags = (list(r["tag_cols"])
-                if r.get("tag_cols") is not None and len(r["tag_cols"])
-                else ["template_id"])
-        ready = (
-            matched.repartition(n_out, *tags, "salt")
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .drop("salt")
-        )
-        atomic_overwrite(ready, sink_path, partition_by=["template_id"],
-                         max_records_per_file=max_records_per_file)
-        # parquet-footer count of the committed sink (metadata-only scan);
-        # doubles as a read-back validation of the snapshot we just committed
-        rows = safe_count(enriched.sparkSession, sink_path)
-        counts[r["route_id"]] = rows
+            counts[r["route_id"]] = recorded.get(("route", sink_path), 0)
+        elif r.get("format", "parquet") != "parquet":
+            special.append(r)   # json/kafka sinks: own writer per route
+        else:
+            todo.append(r)
+    for r in special:
+        counts[r["route_id"]] = _route_special_format(
+            enriched, r, sinks_root, manifest, run_id, committer, t0)
+    if not todo:
+        return counts
+
+    # one expression per route; a row fans out to every matching route
+    matched = enriched.withColumn("route_id", F.explode(route_tags(todo)))
+    # partitioning reuse writes ~upstream_partitions x live (route,template)
+    # files; beyond the budget that's a small-files problem, so flip to the
+    # explicit exchange automatically.
+    # Upstream partitions are ESTIMATED, never probed via .rdd — with
+    # AQE enabled, DataFrame.rdd materializes the adaptive plan, i.e.
+    # EXECUTES the upstream shuffle stages (measured 52s on the sf2.0
+    # pipeline plan — it silently re-ran parse+mining). The estimate is
+    # a conservative upper bound: final-stage partitioning is the
+    # shuffle-partition count for shuffled plans, ~input file splits for
+    # scan-only plans; max() of both over-counts shuffled many-file
+    # plans, which errs toward reshuffling (bounded files, one extra
+    # exchange) — the safe direction.
+    up = upstream_partitions
+    if up is None:
+        sess = enriched.sparkSession
+        try:
+            n_files = len(enriched.inputFiles())
+        except Exception:
+            n_files = 0
+        up = max(int(sess.conf.get("spark.sql.shuffle.partitions")),
+                 sess.sparkContext.defaultParallelism, n_files)
+    reshuffle = up * len(todo) * EST_TEMPLATES_PER_ROUTE > FILE_BUDGET
+    if timings is not None:
+        timings["route_reshuffle"] = reshuffle
+    if reshuffle:
+        # explicit exchange: clusters each sink's rows into few partitions
+        # (files ~ salt_buckets x templates, independent of upstream task
+        # count) and salts hot conversations across tasks
+        ready = (add_salt(matched, salt_buckets)
+                 .repartition("route_id", "salt")
+                 .sortWithinPartitions("conv_id", "turn_idx").drop("salt"))
+    else:
+        # partitioning REUSE: the enriched view arrives clustered by conv_id
+        # from the merge-window shuffle — fan-out + write need no second
+        # full-data exchange (a partitioning reused across stages).
+        # Rows are locally sorted so each (route, template) run is
+        # contiguous and conv-ordered within its file
+        ready = matched.sortWithinPartitions(
+            "route_id", "template_id", "conv_id", "turn_idx")
+
+    staging = os.path.join(sinks_root, ".__routed_tmp__")
+    if os.path.exists(staging):
+        shutil.rmtree(staging)
+    os.makedirs(sinks_root, exist_ok=True)
+    w = ready.write.mode("overwrite").partitionBy("route_id", "template_id")
+    if max_records_per_file:
+        w = w.option("maxRecordsPerFile", max_records_per_file)
+    w.parquet(staging)
+    t_write = time.time()
+
+    # per-sink row counts straight from parquet footers on the driver —
+    # metadata-only, threaded; replaces a full Spark job over the staging
+    # dir (which re-lists and re-plans thousands of files)
+    staged_counts, staged_marks = _footer_counts(staging)
+    t_count = time.time()
+
+    # per-sink commits + manifest records are independent → run them off the
+    # serial tail (driver-side os.walk byte sums dominate otherwise)
+    def _commit_one(r: dict) -> tuple[str, int]:
+        sink_path = os.path.join(sinks_root, r["sink"])
+        part_dir = os.path.join(staging, f"route_id={r['route_id']}")
+        if os.path.exists(part_dir):
+            committer.commit(part_dir, sink_path)   # snapshot commit per sink
+        else:
+            if os.path.exists(sink_path):
+                shutil.rmtree(sink_path)
+            os.makedirs(sink_path)                  # route matched nothing
+        rows = int(staged_counts.get(r["route_id"], 0))
         if manifest:
-            manifest.record(
-                run_id, "route", sink_path, rows, _dir_bytes(sink_path),
-                started=t0,
-            )
+            manifest.record(run_id, "route", sink_path, rows,
+                            _dir_bytes(sink_path), started=t0,
+                            watermark=staged_marks.get(r["route_id"]))
+        return r["route_id"], rows
+
+    with ThreadPoolExecutor(max_workers=min(8, len(todo))) as pool:
+        for route_id, rows in pool.map(_commit_one, todo):
+            counts[route_id] = rows
+    shutil.rmtree(staging, ignore_errors=True)
+    if timings is not None:
+        now = time.time()
+        timings["route_write"] = round(t_write - t0, 3)
+        timings["route_count"] = round(t_count - t_write, 3)
+        timings["route_commit"] = round(now - t_count, 3)
     return counts
 
 
@@ -255,7 +368,7 @@ def _route_special_format(enriched: DataFrame, r: dict, sinks_root: str,
             committer.sweep(sink_path)
             frame.write.mode("overwrite").parquet(tmp)
             committer.commit(tmp, sink_path)
-            rows = safe_count(spark, sink_path)
+            rows = footer_count(sink_path)
     else:
         raise ValueError(f"unknown route format {fmt!r} for {r['route_id']}")
     if manifest:
@@ -274,186 +387,28 @@ def merge_sinks(spark, sink_paths: list[str], out_path: str,
     order — a range-partitioned sort, so every output file holds a
     contiguous, internally sorted key range (total order across files by
     file order). Returns rows merged."""
+    if not sink_paths:
+        raise ValueError("merge_sinks: the sink list is empty")
     dfs = [spark.read.parquet(p) for p in sink_paths]
     merged = dfs[0]
     for d in dfs[1:]:
         merged = merged.unionByName(d, allowMissingColumns=True)
     ordered = merged.orderBy(*order_cols)
     atomic_overwrite(ordered, out_path, committer=committer)
-    return safe_count(spark, out_path)
+    return footer_count(out_path)
 
 
-def _footer_counts(staging: str, ts_col: str = "ts"
-                   ) -> tuple[dict[str, int], dict[str, object]]:
-    """({route_id: rows}, {route_id: max event ts}) from parquet footers
-    under staging/route_id=*/ — driver-side metadata reads (~0.3 ms/file),
-    threaded. The max-ts comes from row-group column statistics, so the
-    per-sink event-time watermark (reference confirmedScn progression) costs
-    zero data reads."""
-    import pyarrow.parquet as pq
-
+def _footer_counts(staging: str) -> tuple[dict[str, int], dict[str, object]]:
+    """({route_id: rows}, {route_id: max event ts}) from the parquet footers
+    under staging/route_id=*/ (see `_footers`)."""
     files = glob.glob(os.path.join(staging, "route_id=*", "**", "*.parquet"),
                       recursive=True)
-
-    def one(f: str):
-        rid = next(p.split("=", 1)[1] for p in f.split(os.sep)
-                   if p.startswith("route_id="))
-        md = pq.ParquetFile(f).metadata
-        wm = None
-        try:
-            ci = md.schema.names.index(ts_col)
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(ci).statistics
-                if st is not None and st.has_min_max:
-                    wm = st.max if wm is None else max(wm, st.max)
-        except ValueError:
-            pass   # no ts column in this sink schema
-        return rid, md.num_rows, wm
-
     counts: dict[str, int] = {}
     marks: dict[str, object] = {}
-    if files:
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            for rid, n, wm in pool.map(one, files):
-                counts[rid] = counts.get(rid, 0) + n
-                if wm is not None:
-                    marks[rid] = wm if rid not in marks else max(marks[rid], wm)
+    for f, (n, wm) in zip(files, _footers(files)):
+        rid = next(p.split("=", 1)[1] for p in f.split(os.sep)
+                   if p.startswith("route_id="))
+        counts[rid] = counts.get(rid, 0) + n
+        if wm is not None:
+            marks[rid] = wm if rid not in marks else max(marks[rid], wm)
     return counts, marks
-
-
-def _route_unified(
-    enriched: DataFrame,
-    routes: list[dict],
-    sinks_root: str,
-    manifest: Manifest | None,
-    run_id: str,
-    salt_buckets: int,
-    shuffle_partitions: int | None,
-    committer=None,
-    timings: dict | None = None,
-    reshuffle: bool | str = "auto",
-    file_budget: int = DEFAULT_FILE_BUDGET,
-    max_records_per_file: int | None = None,
-    upstream_partitions: int | None = None,
-) -> dict[str, int]:
-    """Single-pass fan-out: see route_stage(strategy='unified')."""
-    committer = committer or DEFAULT_COMMITTER
-    done = manifest.done("route") if manifest else set()
-    counts: dict[str, int] = {}
-    t0 = time.time()
-
-    todo, special = [], []
-    for r in routes:
-        sink_path = os.path.join(sinks_root, r["sink"])
-        if sink_path in done:
-            counts[r["route_id"]] = (manifest.counts_by_sink().get(("route", sink_path), 0)
-                                     if manifest else 0)
-        elif r.get("format", "parquet") != "parquet":
-            special.append(r)   # json/kafka sinks: own writer per route
-        else:
-            todo.append(r)
-    for r in special:
-        counts[r["route_id"]] = _route_special_format(
-            enriched, r, sinks_root, manifest, run_id, committer, t0)
-    if not todo:
-        return counts
-
-    # one expression per route; a row fans out to every matching route
-    route_tags = F.array(*[
-        F.when(compile_route_filter(r["template_pattern"], r["condition"]),
-               F.lit(r["route_id"]))
-        for r in todo
-    ])
-    matched = enriched.withColumn(
-        "route_id", F.explode(F.filter(route_tags, lambda x: x.isNotNull())))
-    if reshuffle == "auto":
-        # partitioning reuse writes ~upstream_partitions x live
-        # (route,template) files; beyond the budget that's a small-files
-        # problem, so flip to the explicit exchange automatically.
-        # Upstream partitions are ESTIMATED, never probed via .rdd — with
-        # AQE enabled, DataFrame.rdd materializes the adaptive plan, i.e.
-        # EXECUTES the upstream shuffle stages (measured 52s on the sf2.0
-        # pipeline plan — it silently re-ran parse+mining). The estimate is
-        # a conservative upper bound: final-stage partitioning is the
-        # shuffle-partition count for shuffled plans, ~input file splits for
-        # scan-only plans; max() of both over-counts shuffled many-file
-        # plans, which errs toward reshuffling (bounded files, one extra
-        # exchange) — the safe direction.
-        up = upstream_partitions
-        if up is None:
-            sess = enriched.sparkSession
-            try:
-                n_files = len(enriched.inputFiles())
-            except Exception:
-                n_files = 0
-            up = max(int(sess.conf.get("spark.sql.shuffle.partitions")),
-                     sess.sparkContext.defaultParallelism, n_files)
-        est_files = up * max(1, len(todo)) * EST_TEMPLATES_PER_ROUTE
-        reshuffle = est_files > file_budget
-    if timings is not None:
-        timings["route_reshuffle"] = bool(reshuffle)
-    if reshuffle:
-        # explicit exchange: clusters each sink's rows into few partitions
-        # (files ~ salt_buckets x templates, independent of upstream task
-        # count) and salts hot conversations across tasks. The right choice
-        # when upstream partitioning is unknown or task count is huge.
-        matched = add_salt(matched, salt_buckets)
-        n_out = shuffle_partitions
-        rep = (matched.repartition(n_out, "route_id", "salt") if n_out
-               else matched.repartition("route_id", "salt"))
-        ready = rep.sortWithinPartitions("conv_id", "turn_idx").drop("salt")
-    else:
-        # partitioning REUSE (default): the enriched view arrives clustered
-        # by conv_id from the merge-window shuffle — fan-out + write need no
-        # second full-data exchange (brief: "reuse a partitioning across
-        # stages"). Rows are locally sorted so each (route, template) run is
-        # contiguous and conv-ordered within its file; files ~= upstream
-        # partitions x live (route, template) combos — fine up to thousands
-        # of tasks, switch reshuffle=True beyond that.
-        ready = matched.sortWithinPartitions(
-            "route_id", "template_id", "conv_id", "turn_idx")
-
-    staging = os.path.join(sinks_root, ".__routed_tmp__")
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    os.makedirs(sinks_root, exist_ok=True)
-    w = ready.write.mode("overwrite").partitionBy("route_id", "template_id")
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.parquet(staging)
-    t_write = time.time()
-
-    # per-sink row counts straight from parquet footers on the driver —
-    # metadata-only, threaded; replaces a full Spark job over the staging
-    # dir (which re-lists and re-plans thousands of files)
-    staged_counts, staged_marks = _footer_counts(staging)
-    t_count = time.time()
-
-    # per-sink commits + manifest records are independent → run them off the
-    # serial tail (driver-side os.walk byte sums dominate otherwise)
-    def _commit_one(r: dict) -> tuple[str, int]:
-        sink_path = os.path.join(sinks_root, r["sink"])
-        part_dir = os.path.join(staging, f"route_id={r['route_id']}")
-        if os.path.exists(part_dir):
-            committer.commit(part_dir, sink_path)   # snapshot commit per sink
-        else:
-            if os.path.exists(sink_path):
-                shutil.rmtree(sink_path)
-            os.makedirs(sink_path)                  # route matched nothing
-        rows = int(staged_counts.get(r["route_id"], 0))
-        if manifest:
-            manifest.record(run_id, "route", sink_path, rows,
-                            _dir_bytes(sink_path), started=t0,
-                            watermark=staged_marks.get(r["route_id"]))
-        return r["route_id"], rows
-
-    with ThreadPoolExecutor(max_workers=min(8, len(todo))) as pool:
-        for route_id, rows in pool.map(_commit_one, todo):
-            counts[route_id] = rows
-    shutil.rmtree(staging, ignore_errors=True)
-    if timings is not None:
-        now = time.time()
-        timings["route_write"] = round(t_write - t0, 3)
-        timings["route_count"] = round(t_count - t_write, 3)
-        timings["route_commit"] = round(now - t_count, 3)
-    return counts

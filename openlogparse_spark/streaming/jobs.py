@@ -161,10 +161,11 @@ def stream_routed_sink(dims_dir: str, sinks_root: str,
     config checkpoints live (Checkpoint.cpp:62-279, HTTP control plane
     ReplicatorHttpServer.cpp:43-111). Spark mapping: a stream-static join
     resolves the static side ONCE at query start — so instead each
-    foreachBatch re-reads `dim_tools.parquet` and `routes.parquet` and
-    re-broadcasts; a dictionary or route-table update becomes visible to the
-    NEXT micro-batch with no query restart. The dims are KB-scale, so the
-    per-batch re-read is a driver metadata op + tiny broadcast, not a scan.
+    foreachBatch re-reads `dim_tools.parquet` (re-broadcast) and the route
+    table (`read_routes`, a driver-side pandas read, uncached); a dictionary
+    or route-table update becomes visible to the NEXT micro-batch with no
+    query restart. The dims are KB-scale, so the per-batch re-read is a
+    driver metadata op + tiny broadcast, not a scan.
 
     Returns a function for `writeStream.foreachBatch(...)`; the caller owns
     trigger/checkpoint (exactly-once via Spark's sink commit log + the
@@ -172,21 +173,14 @@ def stream_routed_sink(dims_dir: str, sinks_root: str,
     """
     import os
 
-    from openlogparse_spark.route import compile_route_filter
+    from openlogparse_spark.route.router import read_routes, route_tags
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         dim_tools = spark.read.parquet(os.path.join(dims_dir, "dim_tools.parquet"))
-        routes = (spark.read.parquet(os.path.join(dims_dir, "routes.parquet"))
-                  .toPandas().to_dict("records"))
         enriched = batch_df.join(F.broadcast(dim_tools), "tool", "left")
-        tags = F.array(*[
-            F.when(compile_route_filter(r["template_pattern"], r["condition"]),
-                   F.lit(r["route_id"]))
-            for r in routes
-        ])
         routed = enriched.withColumn(
-            "route_id", F.explode(F.filter(tags, lambda x: x.isNotNull())))
+            "route_id", F.explode(route_tags(read_routes(dims_dir))))
         # batch-scoped subdir => re-processing a batch after a crash simply
         # overwrites the same dir (idempotent, the file-sink commit analogue)
         batch_dir = os.path.join(sinks_root, f"batch={batch_id}")

@@ -3,6 +3,7 @@
 import os
 import shutil
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 
@@ -10,6 +11,13 @@ from openlogparse_spark.enrich import enrich_stage
 from openlogparse_spark.manifest import Manifest
 from openlogparse_spark.parse import parse_stage
 from openlogparse_spark.route import add_salt, compile_route_filter, route_stage
+from openlogparse_spark.route.router import (
+    EST_TEMPLATES_PER_ROUTE,
+    FILE_BUDGET,
+    footer_count,
+    read_routes,
+    route_tags,
+)
 
 TMP = "data/tmp/test_route"
 
@@ -100,17 +108,21 @@ def test_sink_partitioned_by_template(spark):
 
 
 def test_reuse_vs_reshuffle_identical_sinks(spark, enriched, fx_dir):
-    """The partitioning-reuse write (default) and the salted-reshuffle write
-    commit identical per-sink row sets — the exchange is a physical choice,
-    never a semantic one."""
-    routes = spark.read.parquet(
-        os.path.join(fx_dir, "routes.parquet")).toPandas().to_dict("records")[:3]
+    """The partitioning-reuse write and the salted-reshuffle write commit
+    identical per-sink row sets — the exchange is a physical choice, never a
+    semantic one. The plan is picked by the router's own rule from the true
+    upstream partitioning: the cached view's few partitions stay under the
+    file budget (reuse), a repartition(200) upstream crosses it (200 x 3
+    routes x EST_TEMPLATES_PER_ROUTE > FILE_BUDGET: reshuffle)."""
+    routes = read_routes(fx_dir)[:3]
     ok_rows = enriched.filter("parse_ok")
     digests = {}
-    for mode in (False, True):
-        root = os.path.join(TMP, f"mode_{mode}")
+    for upstream, up_parts in ((ok_rows, None), (ok_rows.repartition(200), 200)):
+        timings = {}
+        root = os.path.join(TMP, f"mode_{up_parts}")
         shutil.rmtree(root, ignore_errors=True)
-        counts = route_stage(ok_rows, routes, root, reshuffle=mode, salt_buckets=8)
+        counts = route_stage(upstream, routes, root, salt_buckets=8,
+                             timings=timings, upstream_partitions=up_parts)
         sigs = {}
         for r in routes:
             df = spark.read.parquet(os.path.join(root, r["sink"]))
@@ -118,7 +130,8 @@ def test_reuse_vs_reshuffle_identical_sinks(spark, enriched, fx_dir):
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.hash("conv_id", "turn_idx", "text")).alias("h")).first()
             sigs[r["route_id"]] = (counts[r["route_id"]], agg["n"], agg["h"])
-        digests[mode] = sigs
+        digests[timings["route_reshuffle"]] = sigs
+    assert set(digests) == {False, True}       # both plans ran
     assert digests[False] == digests[True]
 
 
@@ -142,15 +155,8 @@ def test_route_reuse_mode_adds_no_exchange(spark, enriched, fx_dir):
     """Partitioning reuse is real: the fan-out write plan on top of the
     cached enriched view contains NO Exchange (the salted mode contains
     exactly one) — the 'reuse a partitioning across stages' invariant."""
-    from openlogparse_spark.route.router import add_salt, compile_route_filter
-
-    routes = spark.read.parquet(
-        os.path.join(fx_dir, "routes.parquet")).toPandas().to_dict("records")
-    tags = F.array(*[
-        F.when(compile_route_filter(r["template_pattern"], r["condition"]),
-               F.lit(r["route_id"])) for r in routes])
     matched = enriched.withColumn(
-        "route_id", F.explode(F.filter(tags, lambda x: x.isNotNull())))
+        "route_id", F.explode(route_tags(read_routes(fx_dir))))
     reuse = matched.sortWithinPartitions(
         "route_id", "template_id", "conv_id", "turn_idx")
     def above_cache(df):
@@ -166,28 +172,30 @@ def test_route_reuse_mode_adds_no_exchange(spark, enriched, fx_dir):
 
 
 def test_auto_reshuffle_respects_file_budget(spark, enriched, fx_dir):
-    """reshuffle='auto' (the default): partitioning reuse under the file
-    budget, explicit exchange above it — a heavily partitioned upstream
-    can't silently produce an unbounded small-files sink."""
+    """The exchange rule: partitioning reuse while the estimated file count
+    (upstream partitions x routes x EST_TEMPLATES_PER_ROUTE) stays within
+    FILE_BUDGET, the salted exchange beyond it — a heavily partitioned
+    upstream can't silently produce an unbounded small-files sink."""
     import glob as _glob
 
-    routes = spark.read.parquet(
-        os.path.join(fx_dir, "routes.parquet")).toPandas().to_dict("records")[:3]
-    ok = enriched.filter("parse_ok").repartition(64)   # pathological upstream
+    routes = read_routes(fx_dir)[:3]
+    ok = enriched.filter("parse_ok")
 
-    def run(root, budget):
+    def run(root, parts):
         shutil.rmtree(root, ignore_errors=True)
         timings = {}
-        counts = route_stage(ok, routes, root, salt_buckets=4,
-                             shuffle_partitions=4, timings=timings,
-                             file_budget=budget)
+        counts = route_stage(ok.repartition(parts), routes, root,
+                             salt_buckets=4, timings=timings,
+                             upstream_partitions=parts)
         nf = len(_glob.glob(os.path.join(root, "**", "*.parquet"),
                             recursive=True))
         return counts, timings["route_reshuffle"], nf
 
-    c_hi, flipped, nf_reshuffled = run(os.path.join(TMP, "auto_small"), 100)
+    assert 64 * len(routes) * EST_TEMPLATES_PER_ROUTE <= FILE_BUDGET \
+        < 200 * len(routes) * EST_TEMPLATES_PER_ROUTE
+    c_hi, flipped, nf_reshuffled = run(os.path.join(TMP, "auto_small"), 200)
     assert flipped is True
-    c_lo, kept, nf_reuse = run(os.path.join(TMP, "auto_big"), 10**9)
+    c_lo, kept, nf_reuse = run(os.path.join(TMP, "auto_big"), 64)
     assert kept is False
     assert c_hi == c_lo                       # physical choice only
     assert nf_reshuffled < nf_reuse           # the budget bought fewer files
@@ -195,25 +203,57 @@ def test_auto_reshuffle_respects_file_budget(spark, enriched, fx_dir):
 
 def test_max_records_per_file_knob(spark, enriched, fx_dir):
     """WriterFile rotation analogue: every routed parquet file respects the
-    per-file row cap, at both router strategies."""
+    per-file row cap."""
     import glob as _glob
 
     import pyarrow.parquet as pq
 
-    routes = spark.read.parquet(
-        os.path.join(fx_dir, "routes.parquet")).toPandas().to_dict("records")[:1]
+    routes = read_routes(fx_dir)[:1]
     ok = enriched.filter("parse_ok")
-    for strategy in ("unified", "fanout"):
-        root = os.path.join(TMP, f"rot_{strategy}")
-        shutil.rmtree(root, ignore_errors=True)
-        counts = route_stage(ok, routes, root, strategy=strategy,
-                             salt_buckets=2, shuffle_partitions=2,
-                             max_records_per_file=200)
-        files = _glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
-        assert files and counts[routes[0]["route_id"]] > 200
-        sizes = [pq.ParquetFile(f).metadata.num_rows for f in files]
-        assert max(sizes) <= 200, (strategy, max(sizes))
-        assert sum(sizes) == counts[routes[0]["route_id"]]
+    root = os.path.join(TMP, "rot")
+    shutil.rmtree(root, ignore_errors=True)
+    counts = route_stage(ok, routes, root, salt_buckets=2,
+                         max_records_per_file=200)
+    files = _glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+    assert files and counts[routes[0]["route_id"]] > 200
+    sizes = [pq.ParquetFile(f).metadata.num_rows for f in files]
+    assert max(sizes) <= 200, max(sizes)
+    assert sum(sizes) == counts[routes[0]["route_id"]]
+
+
+def test_route_stage_rejects_removed_plan_knobs(enriched, fx_dir):
+    """One write path, one exchange rule: the old plan switches are gone."""
+    routes = read_routes(fx_dir)[:1]
+    for kw in ({"strategy": "fanout"}, {"reshuffle": True},
+               {"file_budget": 100}, {"shuffle_partitions": 4}):
+        with pytest.raises(TypeError):
+            route_stage(enriched, routes, os.path.join(TMP, "knobs"), **kw)
+
+
+def test_footer_count_empty_and_corrupt_sinks(spark, enriched):
+    """A sink with no data files counts 0; a committed sink holding a
+    corrupt parquet file raises instead of counting 0 (resume would then
+    record it done and skip it forever)."""
+    root = os.path.join(TMP, "footer")
+    shutil.rmtree(root, ignore_errors=True)
+    empty = os.path.join(root, "empty")
+    os.makedirs(os.path.join(empty, "template_id=t1"))
+    assert footer_count(empty) == 0
+    sink = os.path.join(root, "sink")
+    enriched.limit(300).write.partitionBy("template_id").parquet(sink)
+    assert footer_count(sink) == 300
+    part = next(d for d in sorted(os.listdir(sink)) if d.startswith("template_id="))
+    with open(os.path.join(sink, part, "part-99999-corrupt.parquet"), "w") as f:
+        f.write("not a parquet file")
+    with pytest.raises(pa.ArrowInvalid):
+        footer_count(sink)
+
+
+def test_merge_sinks_rejects_empty_list(spark):
+    from openlogparse_spark.route import merge_sinks
+
+    with pytest.raises(ValueError, match="empty"):
+        merge_sinks(spark, [], os.path.join(TMP, "merge_empty"))
 
 
 def test_rac_merge_fan_in(spark, enriched, fx_dir):
@@ -250,13 +290,16 @@ def test_rac_merge_fan_in(spark, enriched, fx_dir):
 def test_hot_conversation_spreads_in_reshuffle_mode(spark):
     """Skew evidence: ONE viral conversation (400k turns) routed in salted
     reshuffle mode spreads across many output files with no file holding more
-    than ~3x the mean — the straggler-defusing property the salt exists for."""
+    than ~3x the mean — the straggler-defusing property the salt exists for.
+    The upstream's 600 partitions (600 x 1 route x EST_TEMPLATES_PER_ROUTE >
+    FILE_BUDGET) make the router's rule pick the salted exchange."""
     import glob as _glob
 
     import pyarrow.parquet as pq
 
-    n = 400_000
-    viral = spark.range(n).select(
+    n, parts = 400_000, 600
+    assert parts * EST_TEMPLATES_PER_ROUTE > FILE_BUDGET
+    viral = spark.range(0, n, 1, parts).select(
         F.lit("viral").alias("conv_id"),
         F.col("id").cast("long").alias("turn_idx"),
         F.lit("assistant").alias("role"),
@@ -270,11 +313,25 @@ def test_hot_conversation_spreads_in_reshuffle_mode(spark):
     shutil.rmtree(root, ignore_errors=True)
     routes = [{"route_id": "r_all", "sink": "r_all",
                "template_pattern": "^COMMIT", "condition": ""}]
-    counts = route_stage(viral, routes, root, reshuffle=True,
-                         salt_buckets=16, shuffle_partitions=16)
+    timings = {}
+    # the exchange's width is the session's shuffle partition count; AQE
+    # would coalesce this small shuffle down to its 1 MB partition floor
+    # (3 partitions under the test session), so it is held at 16 here
+    conf = {"spark.sql.shuffle.partitions": "16",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        counts = route_stage(viral, routes, root, salt_buckets=16,
+                             timings=timings, upstream_partitions=parts)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert timings["route_reshuffle"] is True
     assert counts["r_all"] == n
     files = _glob.glob(os.path.join(root, "r_all", "**", "*.parquet"),
                        recursive=True)
     sizes = [pq.ParquetFile(f).metadata.num_rows for f in files]
-    assert len(sizes) >= 8                      # spread over many tasks
+    assert len(sizes) >= 8, sizes               # spread over many tasks
     assert max(sizes) <= 3 * (sum(sizes) / len(sizes))

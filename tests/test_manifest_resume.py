@@ -320,3 +320,33 @@ print('DONE', flush=True)
         dims_dir=fx_dir, output_root=clean_root, salt_buckets=4, run_id="clean"))
     assert _sink_digest(os.path.join(root, "sinks")) == \
         _sink_digest(os.path.join(clean_root, "sinks"))
+
+
+# Spark jobs one warm run_pipeline runs on the sf0.01 fixture: 21 when
+# measured (35 while each staged table, aggregate and merged sink was
+# counted with a Spark read and the route table was read through Spark)
+WARM_JOB_BUDGET = 21
+
+
+def test_warm_pipeline_job_count(spark, fx_dir_big):
+    """Fixed cost of a batch job: after a cold run, a warm run_pipeline on
+    the sf0.01 fixture runs at most WARM_JOB_BUDGET Spark jobs. Row counts
+    come from parquet footers and the route table is read with pandas, so
+    neither costs a job."""
+    sc = spark.sparkContext
+    jobs = {}
+    for tag in ("cold", "warm"):
+        root = f"{TMP}_jobs_{tag}"
+        shutil.rmtree(root, ignore_errors=True)
+        group = f"job_count_{tag}"
+        sc.setJobGroup(group, group)
+        try:
+            run_pipeline(spark, PipelineConfig(
+                input_path=os.path.join(fx_dir_big, "transcripts.parquet"),
+                dims_dir=fx_dir_big, output_root=root, run_id=tag))
+        finally:
+            for k in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(k, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[tag] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs["warm"] <= WARM_JOB_BUDGET, jobs

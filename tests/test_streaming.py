@@ -72,8 +72,9 @@ def test_stream_counts_match_batch(spark, stream_input, templates, fx_dir):
 
 def test_stream_dictionary_refresh_mid_stream(spark, fx_dir):
     """Per-micro-batch dictionary + route-table re-read: an update to
-    dim_tools between batches must be visible to post-update batches without
-    a query restart (reference: SystemTransaction dictionary maintenance)."""
+    dim_tools and to the route table between batches must be visible to
+    post-update batches without a query restart (reference:
+    SystemTransaction dictionary maintenance)."""
     import pandas as pd
 
     from openlogparse_spark.streaming.jobs import stream_routed_sink
@@ -117,15 +118,31 @@ def test_stream_dictionary_refresh_mid_stream(spark, fx_dir):
 
     feed("f1")
     q.processAllAvailable()
+    pre_batches = set(os.listdir(sinks))
 
     # dictionary update: every tool's category flips to 'UPDATED'
     dt = pd.read_parquet(os.path.join(dims, "dim_tools.parquet"))
     dt["category"] = "UPDATED"
     dt.to_parquet(os.path.join(dims, "dim_tools.parquet"))
+    # route-table update: the r_txn route is dropped
+    rt = pd.read_parquet(os.path.join(dims, "routes.parquet"))
+    rt[rt.route_id != "r_txn"].to_parquet(os.path.join(dims, "routes.parquet"))
 
     feed("f2")
     q.processAllAvailable()
     q.stop()
+
+    def routes_in(batch):
+        return {d.split("=", 1)[1] for d in os.listdir(os.path.join(sinks, batch))
+                if d.startswith("route_id=")}
+
+    post_batches = set(os.listdir(sinks)) - pre_batches
+    assert pre_batches and post_batches
+    # every batch gets the same 2000 rows: before the update r_txn takes
+    # some of them, after it no batch routes to r_txn, the rest still route
+    assert all("r_txn" in routes_in(b) for b in pre_batches)
+    for b in post_batches:
+        assert "r_txn" not in routes_in(b) and routes_in(b), b
 
     out = spark.read.option("basePath", sinks).parquet(sinks)
     cats = {r["category"] for r in
