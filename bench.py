@@ -140,19 +140,19 @@ def main() -> None:
 
     from openlogparse_spark.parse import merge_row_pieces
     from openlogparse_spark.parse.stage import mine_template_table
+    from openlogparse_spark.session import to_local_relation
     from openlogparse_spark.streaming import stream_hourly_counts, stream_parse_enrich
     from openlogparse_spark.streaming.jobs import stream_source
 
     batch = spark.read.parquet(os.path.join(fx_dir, "transcripts.parquet"))
-    # pin the mined table as a LITERAL relation: a stream-static join re-runs
-    # its static side's plan every micro-batch, so an un-collected mining
-    # subtree would re-mine the whole corpus per trigger.
+    # pin the mined table as a JVM-local relation: a stream-static join
+    # re-runs its static side's plan every micro-batch, so an un-collected
+    # mining subtree would re-mine the whole corpus per trigger.
     # The one-time mining pass is timed SEPARATELY (streaming_mine_templates)
     # so streaming_e2e measures the drain rate alone — see BENCH/NOTES.md r5
     # for the lane-definition change vs r3/r4 (which folded mining in).
     t0 = time.time()
-    templates = spark.createDataFrame(
-        mine_template_table(merge_row_pieces(batch)).collect())
+    templates = to_local_relation(mine_template_table(merge_row_pieces(batch)))
     timings["streaming_mine_templates"] = round(time.time() - t0, 3)
     total += timings["streaming_mine_templates"]
     # file stream sources take a DIRECTORY; expose the (file or dir) fixture

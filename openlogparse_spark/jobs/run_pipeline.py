@@ -80,7 +80,9 @@ def main(argv=None) -> int:
         "turns": n,
         "turns_per_sec": round(n / wall, 1),
         "sink_counts": res.sink_counts,
-        "timings": {k: round(v, 2) for k, v in res.timings.items()},
+        # round the float timings only: `route_reshuffle` is a bool
+        "timings": {k: round(v, 2) if isinstance(v, float) else v
+                    for k, v in res.timings.items()},
     }))
     spark.stop()
     return 0

@@ -104,9 +104,14 @@ def merge_row_pieces(df: DataFrame) -> DataFrame:
 
 def registry_template_df(spark) -> DataFrame:
     """The known 24-template registry as a tiny DataFrame (template_id,
-    template, op) — the analogue of the reference's compiled-in opcode table."""
+    template, op) — the analogue of the reference's compiled-in opcode table.
+    Built from pandas (Arrow), so it plans as a JVM-local relation, not a
+    pickled PythonRDD."""
+    import pandas as pd
+
     return spark.createDataFrame(
-        all_masked_templates(), schema="template_id string, template string, op string"
+        pd.DataFrame(all_masked_templates(), columns=["template_id", "template", "op"]),
+        schema="template_id string, template string, op string",
     )
 
 
@@ -125,9 +130,12 @@ def mine_template_table(
     """
     spark = df.sparkSession
     if mode == "drain":
+        import pandas as pd
+
         mined = drain_mod.mine_templates(df, "text", min_support=min_support)
         mined_df = spark.createDataFrame(
-            mined, schema="template_id string, template string, support long"
+            pd.DataFrame(mined, columns=["template_id", "template", "support"]),
+            schema="template_id string, template string, support long",
         )
     else:
         # a pre-masked input (column `template` present) is counted directly —
@@ -161,7 +169,12 @@ def mine_template_table(
 def _apply_templates_sql(df: DataFrame, templates: DataFrame) -> DataFrame:
     masked = (df if "template" in df.columns
               else df.withColumn("template", F.expr(MASK_SQL_EXPR)))
-    t = F.broadcast(templates.select("template", "template_id", "op"))
+    t = templates.select("template", "template_id", "op")
+    # a lazy side is hinted, as its size estimate is the corpus it
+    # aggregates; a persisted one (run_pipeline persists a table over the
+    # broadcast budget) is left to the planner, which sizes it from its cache
+    if not templates.is_cached:
+        t = F.broadcast(t)
     return masked.join(t, "template", "left")
 
 

@@ -30,6 +30,7 @@ from openlogparse_spark.manifest import Manifest, atomic_overwrite, _dir_bytes
 from openlogparse_spark.parse import parse_stage
 from openlogparse_spark.route import route_stage
 from openlogparse_spark.route.router import footer_count, read_routes
+from openlogparse_spark.session import to_local_relation
 
 
 # input-table contract: column -> acceptable Spark types (the "file header"
@@ -139,7 +140,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
             )
 
     # ---- stage 1+2: parse + enrich -----------------------------------------
-    masked = None
+    masked = tmpl_plan = None
     if parse_requested:
         if not (cfg.materialize_enriched and stage_done("enrich", enriched_path)):
             t0 = time.time()
@@ -154,21 +155,34 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
             if cfg.parse_mode == "sql":
                 merged = merged.withColumn("template", F.expr(MASK_SQL_EXPR))
             masked = merged.persist(StorageLevel.MEMORY_AND_DISK)
-            # mine the template table ONCE and pin it as a LITERAL relation:
-            # left lazy, the mining aggregation is embedded in every
-            # downstream consumer's plan as a broadcast subtree, and
-            # broadcast-exchange reuse only applies within one query — the
-            # route write plus each aggregate job would re-mine the whole
-            # corpus (measured: one extra full-cache aggregation pass per
-            # consumer at sf1.0, plus its codegen compile on first run).
-            # The table is tiny (distinct templates ≪ rows) and this collect
-            # doubles as the cache-fill action the masked view needs anyway
-            # (fusing cache-store into the big fan-out write measured ~25%
-            # slower e2e from memory pressure).
+            # mine the template table ONCE and pin it as a JVM-local relation
+            # (a LocalRelation, collected with Arrow): left lazy, the mining
+            # aggregation is embedded in every downstream consumer's plan as
+            # a broadcast subtree, and broadcast-exchange reuse only applies
+            # within one query — the route write plus each aggregate job
+            # would re-mine the whole corpus (measured: one extra full-cache
+            # aggregation pass per consumer at sf1.0, plus its codegen
+            # compile on first run). A `createDataFrame(collected_rows)` pin
+            # is a pickled PythonRDD that each consumer's broadcast re-runs
+            # in Python workers. The table is tiny (distinct templates ≪
+            # rows) and this collect doubles as the cache-fill action the
+            # masked view needs anyway (fusing cache-store into the big
+            # fan-out write measured ~25% slower e2e from memory pressure).
+            # Past the broadcast budget (distinct templates ~ rows) the
+            # helper keeps the plan, which is then persisted: mined once
+            # more for every consumer (the helper's bounded probe was one
+            # pass), it stays on the executors, and `_apply_templates_sql`
+            # joins a persisted side without a broadcast hint. (Persisting
+            # before the probe costs the common path a Spark job.) Drain
+            # mode is not bounded so: its miner returns the table to the
+            # driver, and its apply ships the whole tree to every worker.
             tmpl_plan = mine_template_table(
                 masked, min_support=cfg.min_support, mode=cfg.parse_mode)
-            templates = spark.createDataFrame(
-                tmpl_plan.collect(), schema=tmpl_plan.schema)
+            templates = to_local_relation(tmpl_plan)
+            if templates is tmpl_plan:
+                templates = tmpl_plan.persist(StorageLevel.MEMORY_AND_DISK)
+            else:
+                tmpl_plan = None
             parsed = parse_stage(masked, templates=templates,
                                  mode=cfg.parse_mode,
                                  min_support=cfg.min_support,
@@ -176,8 +190,10 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
             enriched = enrich_stage(parsed, dim_tools, dim_roles)
             if cfg.materialize_enriched:
                 atomic_overwrite(enriched, enriched_path)
-                masked.unpersist()
-                masked = None
+                for cached in (masked, tmpl_plan):
+                    if cached is not None:
+                        cached.unpersist()
+                masked = tmpl_plan = None
                 rows = footer_count(enriched_path)
                 man.record(cfg.run_id, "enrich", enriched_path, rows,
                            _dir_bytes(enriched_path), started=t0)
@@ -275,6 +291,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
                 futures[name].result()
             timings["aggregate"] = time.time() - t0a
 
-    if masked is not None:
-        masked.unpersist()
+    for cached in (masked, tmpl_plan):
+        if cached is not None:
+            cached.unpersist()
     return PipelineResult(cfg.run_id, enriched_path, sink_counts, man, timings)

@@ -10,9 +10,10 @@ Local-mode defaults mirror what we would set on a real cluster:
 
 from __future__ import annotations
 
+import logging
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -93,3 +94,40 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def broadcast_budget(spark: SparkSession) -> int:
+    """Bytes a driver-side static table may hold: the session's
+    `spark.sql.autoBroadcastJoinThreshold`, the size up to which the planner
+    broadcasts a join side on its own (<= 0 turns that off)."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+
+
+def to_local_relation(df: DataFrame) -> DataFrame:
+    """Pin a small table as a JVM-local relation.
+
+    Collects `df` once with Arrow and rebuilds it with
+    `createDataFrame(arrow_table)`, whose plan is a `LocalRelation`: a
+    broadcast of it runs JVM tasks only (no Python worker, no pickling) and
+    never re-runs `df`'s plan. `createDataFrame(collected_rows)` instead
+    plans a `LogicalRDD` over a pickled `PythonRDD` that every action, and
+    every micro-batch of a stream-static join, executes again.
+
+    Byte guard: at most `budget // row_width + 1` rows reach the driver,
+    with the row width from Spark's per-type default sizes, and the Arrow
+    table must fit `broadcast_budget`. Over budget, `df` is returned
+    unchanged and one line is logged; the caller then owns the join (an
+    explicit `F.broadcast` hint on it would ignore the budget).
+    """
+    spark = df.sparkSession
+    budget = broadcast_budget(spark)
+    max_rows = budget // max(1, df._jdf.schema().defaultSize())
+    table = df.limit(max_rows + 1).toArrow() if budget > 0 else None
+    if table is None or table.num_rows > max_rows or table.nbytes > budget:
+        logging.getLogger(__name__).warning(
+            "to_local_relation: table kept as a Spark plan, over the %d-byte "
+            "broadcast budget (%s)", budget,
+            "broadcast off" if table is None else
+            f"{table.num_rows} rows, {table.nbytes} bytes collected")
+        return df
+    return spark.createDataFrame(table, schema=df.schema)

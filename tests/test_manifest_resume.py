@@ -350,3 +350,70 @@ def test_warm_pipeline_job_count(spark, fx_dir_big):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs[tag] = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < jobs["warm"] <= WARM_JOB_BUDGET, jobs
+
+
+def test_template_table_over_budget_keeps_plan(spark, fx_dir, monkeypatch, caplog):
+    """The template table is pinned driver-side only within the broadcast
+    budget (the session's autoBroadcastJoinThreshold). Over it one line says
+    why, the mined table stays on the executors and is joined without a
+    broadcast, and the sinks are the same."""
+    import logging
+
+    from openlogparse_spark import pipeline, session
+
+    parsed, parse_stage = {}, pipeline.parse_stage
+
+    def capture(*args, **kwargs):
+        parsed["df"] = out = parse_stage(*args, **kwargs)
+        return out
+
+    monkeypatch.setattr(pipeline, "parse_stage", capture)
+
+    def run(tag):
+        root = f"{TMP}_budget_{tag}"
+        shutil.rmtree(root, ignore_errors=True)
+        res = run_pipeline(spark, PipelineConfig(
+            input_path=os.path.join(fx_dir, "transcripts.parquet"),
+            dims_dir=fx_dir, output_root=root, salt_buckets=4, run_id=tag))
+        plan = parsed["df"]._jdf.queryExecution().executedPlan().toString()
+        # pre-order tree string: the first join is the template join
+        return res, next(ln for ln in plan.splitlines() if "Join" in ln)
+
+    pinned, pinned_join = run("pinned")
+    assert "BroadcastHashJoin" in pinned_join
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        assert session.broadcast_budget(spark) == 1024
+        with caplog.at_level(logging.WARNING, logger=session.__name__):
+            lazy, lazy_join = run("lazy")
+    finally:
+        spark.conf.set(key, threshold)
+    over = [r for r in caplog.records if "broadcast budget" in r.getMessage()]
+    assert len(over) == 1, over
+    assert "BroadcastHashJoin" not in lazy_join, lazy_join
+    assert lazy.sink_counts == pinned.sink_counts
+
+
+def test_cli_timings_keep_types(spark, fx_dir, monkeypatch, capsys):
+    """The CLI's JSON line rounds float timings and keeps the boolean
+    `route_reshuffle` a JSON boolean."""
+    import json
+
+    from pyspark.sql import SparkSession
+
+    from openlogparse_spark.jobs.run_pipeline import main
+
+    root = f"{TMP}_cli"
+    shutil.rmtree(root, ignore_errors=True)
+    # main() stops its session on exit; keep the shared test session alive
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    # --cpus 8 matches the test session, whose settings main() reapplies
+    assert main(["--input", os.path.join(fx_dir, "transcripts.parquet"),
+                 "--dims", fx_dir, "--output", root, "--cpus", "8",
+                 "--salt-buckets", "4"]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert isinstance(out["timings"]["route_reshuffle"], bool)
+    assert all(isinstance(v, float) for k, v in out["timings"].items()
+               if k != "route_reshuffle")

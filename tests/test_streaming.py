@@ -121,34 +121,51 @@ def test_stream_dictionary_refresh_mid_stream(spark, fx_dir):
     pre_batches = set(os.listdir(sinks))
 
     # dictionary update: every tool's category flips to 'UPDATED'
-    dt = pd.read_parquet(os.path.join(dims, "dim_tools.parquet"))
+    dim_file = os.path.join(dims, "dim_tools.parquet")
+    dt = pd.read_parquet(dim_file)
     dt["category"] = "UPDATED"
-    dt.to_parquet(os.path.join(dims, "dim_tools.parquet"))
+    dt.to_parquet(dim_file)
     # route-table update: the r_txn route is dropped
     rt = pd.read_parquet(os.path.join(dims, "routes.parquet"))
     rt[rt.route_id != "r_txn"].to_parquet(os.path.join(dims, "routes.parquet"))
 
     feed("f2")
     q.processAllAvailable()
+    f2_batches = set(os.listdir(sinks)) - pre_batches
+
+    # second rewrite of the now-cached dictionary, of the same byte size
+    # ('UPDATED' -> 'RENEWED'): the sink's cache must still see it
+    size = os.path.getsize(dim_file)
+    dt["category"] = "RENEWED"
+    dt.to_parquet(dim_file)
+    assert os.path.getsize(dim_file) == size
+
+    feed("f3")
+    q.processAllAvailable()
     q.stop()
+    f3_batches = set(os.listdir(sinks)) - pre_batches - f2_batches
 
     def routes_in(batch):
         return {d.split("=", 1)[1] for d in os.listdir(os.path.join(sinks, batch))
                 if d.startswith("route_id=")}
 
-    post_batches = set(os.listdir(sinks)) - pre_batches
-    assert pre_batches and post_batches
+    assert pre_batches and f2_batches and f3_batches
     # every batch gets the same 2000 rows: before the update r_txn takes
     # some of them, after it no batch routes to r_txn, the rest still route
     assert all("r_txn" in routes_in(b) for b in pre_batches)
-    for b in post_batches:
+    for b in f2_batches | f3_batches:
         assert "r_txn" not in routes_in(b) and routes_in(b), b
 
-    out = spark.read.option("basePath", sinks).parquet(sinks)
-    cats = {r["category"] for r in
-            out.filter("tool IS NOT NULL").select("category").distinct().collect()}
-    assert "UPDATED" in cats            # post-update batches saw the new dict
-    assert len(cats) > 1                # pre-update batches kept the old one
+    def cats_in(batches):
+        out = spark.read.option("basePath", sinks).parquet(
+            *[os.path.join(sinks, b) for b in sorted(batches)])
+        return {r["category"] for r in out.filter("tool IS NOT NULL")
+                .select("category").distinct().collect()}
+
+    pre_cats = cats_in(pre_batches)
+    assert pre_cats and not pre_cats & {"UPDATED", "RENEWED"}
+    assert cats_in(f2_batches) == {"UPDATED"}   # the new dict, next batch
+    assert cats_in(f3_batches) == {"RENEWED"}   # ... and its same-size rewrite
     # streaming commits carry the same lineage trail as batch routing
     mrows = man.load()
     srows = mrows[mrows.stage == "stream_route"]
@@ -160,6 +177,75 @@ def test_stream_dictionary_refresh_mid_stream(spark, fx_dir):
     row = srows.iloc[0]
     actual = spark.read.parquet(row["sink"]).agg(F.max("ts")).first()[0]
     assert pd.Timestamp(row["watermark"]) == pd.Timestamp(actual)
+
+
+def _perfbench_static_sides(spark, templates, fx_dir):
+    """The static sides as the benchmark harness passes them: a template
+    table collected into `createDataFrame(rows)` and a parquet dims scan."""
+    rows = spark.createDataFrame(templates.collect(), schema=templates.schema)
+    return rows, spark.read.parquet(os.path.join(fx_dir, "dim_tools.parquet"))
+
+
+def test_stream_static_sides_are_jvm_local(spark, stream_input, templates,
+                                           fx_dir, capsys):
+    """stream_parse_enrich pins its static sides as JVM-local relations: a
+    micro-batch's optimized plan holds no LogicalRDD (the pickled PythonRDD
+    behind `createDataFrame(rows)`, re-run in Python workers per batch)."""
+    tmpl, dim_tools = _perfbench_static_sides(spark, templates, fx_dir)
+    parsed = stream_parse_enrich(stream_source(spark, stream_input), tmpl, dim_tools)
+    q = (parsed.writeStream.format("noop")
+         .option("checkpointLocation", os.path.join(TMP, "ck_local"))
+         .start())
+    _drain(q)
+    q.explain(extended=True)
+    plans = capsys.readouterr().out
+    optimized = plans[plans.index("== Optimized Logical Plan =="):
+                      plans.index("== Physical Plan ==")]
+    assert "LocalRelation" in optimized
+    assert "LogicalRDD" not in optimized
+
+
+# Spark jobs per non-empty routed-sink micro-batch: a template broadcast and
+# a dims broadcast in stream_parse_enrich, the sink's dims broadcast and its
+# write (5 while the sink scanned dim_tools.parquet with Spark every batch)
+ROUTED_BATCH_JOB_BUDGET = 4
+
+
+def test_stream_routed_sink_jobs_per_batch(spark, templates, fx_dir):
+    """Fixed cost of a stream micro-batch: one file per trigger through
+    stream_parse_enrich into stream_routed_sink runs at most
+    ROUTED_BATCH_JOB_BUDGET Spark jobs per non-empty micro-batch."""
+    from openlogparse_spark.streaming.jobs import stream_routed_sink
+
+    root = os.path.join(TMP, "jobs")
+    shutil.rmtree(root, ignore_errors=True)
+    src, stage = os.path.join(root, "in"), os.path.join(root, "stage")
+    os.makedirs(src)
+    batch = spark.read.parquet(os.path.join(fx_dir, "transcripts.parquet"))
+    batch.repartition(4).write.parquet(stage)
+    tmpl, dim_tools = _perfbench_static_sides(spark, templates, fx_dir)
+    stream = (spark.readStream.schema(batch.schema)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    # the routed sink joins the refreshable dictionary itself
+    routed_in = stream_parse_enrich(stream, tmpl, dim_tools).drop(
+        "category", "risk", "side_effects")
+    q = (routed_in.writeStream
+         .foreachBatch(stream_routed_sink(fx_dir, os.path.join(root, "sinks")))
+         .option("checkpointLocation", os.path.join(root, "ck"))
+         .start())
+    try:
+        for f in sorted(os.listdir(stage)):
+            if f.endswith(".parquet"):
+                os.rename(os.path.join(stage, f), os.path.join(src, f))
+                q.processAllAvailable()
+    finally:
+        q.stop()
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    assert n_batches >= 2
+    assert n_jobs / n_batches <= ROUTED_BATCH_JOB_BUDGET, (n_jobs, n_batches)
 
 
 def test_stream_sessions_close_and_timeout(spark, stream_input):
