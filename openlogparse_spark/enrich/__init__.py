@@ -1,1 +1,1 @@
-from openlogparse_spark.enrich.stage import enrich_stage  # noqa: F401
+from openlogparse_spark.enrich.stage import enrich_stage, read_dim  # noqa: F401

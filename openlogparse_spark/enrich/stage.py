@@ -15,8 +15,29 @@ see it (left join + coalesce).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# path -> ((st_mtime_ns, st_size), pyarrow table): the last version read
+_DIMS: dict = {}
+
+
+def read_dim(spark: SparkSession, path: str) -> DataFrame:
+    """A KB-scale dictionary parquet file as a JVM-local relation, read with
+    pyarrow on the driver and kept under its (mtime, size): an unchanged file
+    costs no Spark job. With coarse file timestamps, a same-size rewrite
+    within one tick of a cached read stays unseen until the next write."""
+    import pyarrow.parquet as pq
+
+    st = os.stat(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    # held locally: another thread may replace the entry in the meantime
+    entry = _DIMS.get(path)
+    if entry is None or entry[0] != stamp:
+        entry = _DIMS[path] = (stamp, pq.read_table(path))
+    return spark.createDataFrame(entry[1])
 
 
 def enrich_stage(

@@ -37,7 +37,8 @@ def main(argv=None) -> int:
     ap.add_argument("--output", default="data/out")
     ap.add_argument("--parse-mode", default="sql", choices=["sql", "drain"])
     ap.add_argument("--salt-buckets", type=int, default=64)
-    ap.add_argument("--cpus", default=None, help="local[N]; omit under spark-submit")
+    ap.add_argument("--cpus", default=None,
+                    help="local[N]; omit under spark-submit (unused in an active session)")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--input-filter", default=None,
                     help="scan-side SQL predicate (tenant/PDB filter analogue)")
@@ -52,12 +53,19 @@ def main(argv=None) -> int:
         with open(args.config) as f:
             cfgd = json.load(f)
 
+    from pyspark.sql import SparkSession
+
     from openlogparse_spark.pipeline import PipelineConfig, run_pipeline
     from openlogparse_spark.route.router import footer_count
     from openlogparse_spark.session import get_spark
 
-    master = f"local[{args.cpus}]" if args.cpus else None
-    spark = get_spark("openlogparse_pipeline", master=master)
+    # a caller's active session is reused as it is: its settings are not
+    # re-applied, and only a session started here is stopped here
+    spark = SparkSession.getActiveSession()
+    own_session = spark is None
+    if own_session:
+        spark = get_spark("openlogparse_pipeline",
+                          master=f"local[{args.cpus}]" if args.cpus else None)
     kw = dict(
         input_path=cfgd.get("input", args.input),
         dims_dir=cfgd.get("dims", args.dims),
@@ -84,7 +92,8 @@ def main(argv=None) -> int:
         "timings": {k: round(v, 2) if isinstance(v, float) else v
                     for k, v in res.timings.items()},
     }))
-    spark.stop()
+    if own_session:
+        spark.stop()
     return 0
 
 

@@ -13,6 +13,8 @@ Reference parity:
       mode='drain' : vectorized pandas/Arrow UDF applying the mined Drain
                      tree (the north-star stage) — memoized per distinct
                      masked string per batch.
+  - fit = template mining (`parse_stage` given no table): building the stage
+    runs one bounded collect that pins the mined table (see parse_stage).
   - quarantine = unknown-opcode warn path, ref src/parser/Parser.cpp:476-478:
     rows whose template has support < min_support get parse_ok=false and a
     null template_id; they are counted, never dropped silently (count
@@ -139,8 +141,8 @@ def mine_template_table(
         )
     else:
         # a pre-masked input (column `template` present) is counted directly —
-        # the pipeline persists the masked view so the mask runs once, not
-        # once for fit and again for apply
+        # parse_stage's fit path persists the masked view so the mask runs
+        # once, not once for fit and again for apply
         masked = (df.select("template") if "template" in df.columns
                   else df.select(F.expr(MASK_SQL_EXPR).alias("template")))
         mined_df = (
@@ -171,8 +173,9 @@ def _apply_templates_sql(df: DataFrame, templates: DataFrame) -> DataFrame:
               else df.withColumn("template", F.expr(MASK_SQL_EXPR)))
     t = templates.select("template", "template_id", "op")
     # a lazy side is hinted, as its size estimate is the corpus it
-    # aggregates; a persisted one (run_pipeline persists a table over the
-    # broadcast budget) is left to the planner, which sizes it from its cache
+    # aggregates; a persisted one (parse_stage's fit path persists a table
+    # over the broadcast budget) is left to the planner, which sizes it from
+    # its cache
     if not templates.is_cached:
         t = F.broadcast(t)
     return masked.join(t, "template", "left")
@@ -240,27 +243,44 @@ def parse_stage(
 ) -> DataFrame:
     """Full parse stage: merge pieces → assign template → extract params.
 
-    If `templates` is None the table is mined from `df` first (fit+apply).
+    If `templates` is None the table is mined from `df` first (fit+apply, one
+    bounded collect when built); the result then holds its cached inputs
+    until `release_cached_inputs()` or garbage collection.
     """
     if merge_pieces:
         df = merge_row_pieces(df)
-    cached = None
+    cached = ()
     if templates is None:
-        # fit+apply in one call: BOTH the mining aggregation (a broadcast
-        # subtree of the final plan) and the apply side read the merged —
-        # and for sql mode masked — rows. Without a persist the whole
-        # merge window + mask expression executes twice per action (the
-        # mask's transform() lambda is interpreted, so this doubling is the
-        # bulk of the stage: measured 2x at sf1.0). The broadcast job runs
-        # first within the action and fills the cache; the apply scan then
-        # reads it — no extra eager action needed. Released when the result
-        # DataFrame is garbage-collected (functions/cache.py).
+        # fit+apply in one call: the mining aggregation and the apply side
+        # both read the merged (and, for sql mode, masked) rows, so they are
+        # persisted once; without it the merge window + mask run twice per
+        # action (the mask's transform() lambda is interpreted: measured 2x
+        # at sf1.0).
         from pyspark import StorageLevel
+
+        from openlogparse_spark.session import to_local_relation
 
         if mode == "sql" and "template" not in df.columns:
             df = df.withColumn("template", F.expr(MASK_SQL_EXPR))
-        df = cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-        templates = mine_template_table(df, min_support=min_support, mode=mode)
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        # The mined table is pinned as a JVM-local relation (one bounded
+        # Arrow collect). Left lazy, the mining aggregation is a broadcast
+        # subtree of every consumer's plan, and broadcast reuse holds within
+        # one query only: a route write plus each aggregate would re-mine
+        # the corpus (measured at sf1.0). The collect doubles as the cache
+        # fill above (fusing the cache store into the big fan-out write
+        # measured ~25% slower end to end, from memory pressure). Past the
+        # broadcast budget (distinct templates ~ rows) the plan is persisted
+        # after the probe (before it, the common path would pay a Spark
+        # job): it stays on the executors and `_apply_templates_sql` joins
+        # it without a broadcast hint. Drain mode is not bounded so: its
+        # miner returns the table to the driver, and its apply ships the
+        # whole tree to every worker.
+        plan = mine_template_table(df, min_support=min_support, mode=mode)
+        templates = to_local_relation(plan)
+        if templates is plan:
+            templates = plan.persist(StorageLevel.MEMORY_AND_DISK)
+        cached = (df, templates)    # unpersisting a LocalRelation is a no-op
     if mode == "drain":
         out = _apply_templates_drain(df, templates)
     else:
@@ -275,10 +295,10 @@ def parse_stage(
         ).alias("params"),
         F.col("template_id").isNotNull().alias("parse_ok"),
     )
-    if cached is not None:
+    if cached:
         from openlogparse_spark.functions.cache import release_on_gc
 
-        out = release_on_gc(out, cached)
+        out = release_on_gc(out, *cached)
     return out
 
 

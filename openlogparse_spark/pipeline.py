@@ -12,6 +12,9 @@ persisted once as a partitioned parquet table, then every route reads it with
 its filter pushed down to the scan — at 100 TB this beats re-parsing per sink
 (the reference parses once and fans out in memory; we parse once and fan out
 through storage, which also buys idempotent resume per sink).
+
+Each static side has one owner: `parse_stage`'s fit path mines and pins the
+template table, and `enrich.read_dim` reads the dims on the driver.
 """
 
 from __future__ import annotations
@@ -25,12 +28,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openlogparse_spark.aggregate import agg_hourly, conv_outcomes, conv_stats
-from openlogparse_spark.enrich import enrich_stage
+from openlogparse_spark.enrich import enrich_stage, read_dim
 from openlogparse_spark.manifest import Manifest, atomic_overwrite, _dir_bytes
 from openlogparse_spark.parse import parse_stage
 from openlogparse_spark.route import route_stage
 from openlogparse_spark.route.router import footer_count, read_routes
-from openlogparse_spark.session import to_local_relation
 
 
 # input-table contract: column -> acceptable Spark types (the "file header"
@@ -124,8 +126,6 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
     validate_input_schema(transcripts)   # header gate: fail fast on drift
     if cfg.input_filter:
         transcripts = transcripts.filter(F.expr(cfg.input_filter))
-    dim_tools = spark.read.parquet(os.path.join(cfg.dims_dir, "dim_tools.parquet"))
-    dim_roles = spark.read.parquet(os.path.join(cfg.dims_dir, "dim_roles.parquet"))
     routes = read_routes(cfg.dims_dir)
 
     enriched_path = os.path.join(cfg.output_root, "enriched")
@@ -140,60 +140,18 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
             )
 
     # ---- stage 1+2: parse + enrich -----------------------------------------
-    masked = tmpl_plan = None
+    parsed = None
     if parse_requested:
         if not (cfg.materialize_enriched and stage_done("enrich", enriched_path)):
             t0 = time.time()
-            # one persisted MASKED view feeds template mining AND apply:
-            # the merge window+group and the masking each run exactly once
-            from pyspark import StorageLevel
-
-            from openlogparse_spark.parse import merge_row_pieces
-            from openlogparse_spark.parse.stage import MASK_SQL_EXPR, mine_template_table
-
-            merged = merge_row_pieces(transcripts)
-            if cfg.parse_mode == "sql":
-                merged = merged.withColumn("template", F.expr(MASK_SQL_EXPR))
-            masked = merged.persist(StorageLevel.MEMORY_AND_DISK)
-            # mine the template table ONCE and pin it as a JVM-local relation
-            # (a LocalRelation, collected with Arrow): left lazy, the mining
-            # aggregation is embedded in every downstream consumer's plan as
-            # a broadcast subtree, and broadcast-exchange reuse only applies
-            # within one query — the route write plus each aggregate job
-            # would re-mine the whole corpus (measured: one extra full-cache
-            # aggregation pass per consumer at sf1.0, plus its codegen
-            # compile on first run). A `createDataFrame(collected_rows)` pin
-            # is a pickled PythonRDD that each consumer's broadcast re-runs
-            # in Python workers. The table is tiny (distinct templates ≪
-            # rows) and this collect doubles as the cache-fill action the
-            # masked view needs anyway (fusing cache-store into the big
-            # fan-out write measured ~25% slower e2e from memory pressure).
-            # Past the broadcast budget (distinct templates ~ rows) the
-            # helper keeps the plan, which is then persisted: mined once
-            # more for every consumer (the helper's bounded probe was one
-            # pass), it stays on the executors, and `_apply_templates_sql`
-            # joins a persisted side without a broadcast hint. (Persisting
-            # before the probe costs the common path a Spark job.) Drain
-            # mode is not bounded so: its miner returns the table to the
-            # driver, and its apply ships the whole tree to every worker.
-            tmpl_plan = mine_template_table(
-                masked, min_support=cfg.min_support, mode=cfg.parse_mode)
-            templates = to_local_relation(tmpl_plan)
-            if templates is tmpl_plan:
-                templates = tmpl_plan.persist(StorageLevel.MEMORY_AND_DISK)
-            else:
-                tmpl_plan = None
-            parsed = parse_stage(masked, templates=templates,
-                                 mode=cfg.parse_mode,
-                                 min_support=cfg.min_support,
-                                 merge_pieces=False)
-            enriched = enrich_stage(parsed, dim_tools, dim_roles)
+            parsed = parse_stage(transcripts, mode=cfg.parse_mode,
+                                 min_support=cfg.min_support)
+            dims = os.path.join(cfg.dims_dir, "{}.parquet")
+            enriched = enrich_stage(parsed, read_dim(spark, dims.format("dim_tools")),
+                                    read_dim(spark, dims.format("dim_roles")))
             if cfg.materialize_enriched:
                 atomic_overwrite(enriched, enriched_path)
-                for cached in (masked, tmpl_plan):
-                    if cached is not None:
-                        cached.unpersist()
-                masked = tmpl_plan = None
+                parsed.release_cached_inputs()
                 rows = footer_count(enriched_path)
                 man.record(cfg.run_id, "enrich", enriched_path, rows,
                            _dir_bytes(enriched_path), started=t0)
@@ -201,7 +159,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
 
     if cfg.materialize_enriched:
         enriched = spark.read.parquet(enriched_path)
-    # else: `enriched` is the live plan over the persisted masked view
+    # else: `enriched` is the live plan over parse_stage's cached inputs
 
     # ---- stages 3+4: route fan-out and aggregates, submitted CONCURRENTLY ---
     # They read independent column subsets of the staged `enriched` table;
@@ -291,7 +249,6 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
                 futures[name].result()
             timings["aggregate"] = time.time() - t0a
 
-    for cached in (masked, tmpl_plan):
-        if cached is not None:
-            cached.unpersist()
+    if parsed is not None:
+        parsed.release_cached_inputs()
     return PipelineResult(cfg.run_id, enriched_path, sink_counts, man, timings)

@@ -20,9 +20,9 @@ Spark mapping:
   - in-memory dictionary → static sides pinned as JVM-local relations: the
                         template table and dims are collected once when the
                         query is built (`stream_parse_enrich`), and the routed
-                        sink's refreshable `dim_tools` is a driver-side
-                        pyarrow read keyed on file mtime, so a micro-batch
-                        runs no Python worker and no scan for them
+                        sink's refreshable `dim_tools` is `enrich.read_dim`'s
+                        driver-side pyarrow read keyed on file mtime, so a
+                        micro-batch runs no Python worker and no scan for them
 """
 
 from __future__ import annotations
@@ -84,13 +84,11 @@ def stream_parse_enrich(stream: DataFrame, templates: DataFrame,
     pre-framed (one logical turn per row), matching the reference's online
     mode where LWN assembly happens upstream of the transaction layer.
     """
-    from openlogparse_spark.parse.stage import MASK_SQL_EXPR
+    from openlogparse_spark.parse.stage import _apply_templates_sql
     from openlogparse_spark.session import to_local_relation
 
-    masked = stream.withColumn("template", F.expr(MASK_SQL_EXPR))
-    t = F.broadcast(to_local_relation(
-        templates.select("template", "template_id", "op")))
-    parsed = masked.join(t, "template", "left").withColumn(
+    parsed = _apply_templates_sql(stream, to_local_relation(
+        templates.select("template", "template_id", "op"))).withColumn(
         "parse_ok", F.col("template_id").isNotNull())
     return parsed.join(F.broadcast(to_local_relation(dim_tools)), "tool", "left")
 
@@ -174,16 +172,12 @@ def stream_routed_sink(dims_dir: str, sinks_root: str,
     config checkpoints live (Checkpoint.cpp:62-279, HTTP control plane
     ReplicatorHttpServer.cpp:43-111). Spark mapping: a stream-static join
     resolves the static side ONCE at query start — so instead each
-    foreachBatch looks `dim_tools.parquet` up on the driver and re-reads the
-    route table (`read_routes`, a driver-side pandas read, uncached); a
-    dictionary or route-table update becomes visible to the NEXT micro-batch
-    with no query restart. The dims are KB-scale: they are read with pyarrow
-    on the driver, cached under the file's (path, mtime, size), and joined as
-    a JVM-local relation, so an unchanged dictionary costs no Spark job (a
-    `spark.read.parquet` per batch cost a schema-inference job plus a scan
-    broadcast). The cache key relies on the file's mtime: where the
-    filesystem keeps coarse timestamps, a rewrite of the same size within
-    one timestamp tick of a cached read stays unseen until the next write.
+    foreachBatch reads `dim_tools.parquet` through `enrich.read_dim` (a
+    driver-side pyarrow read cached under the file's path, mtime and size,
+    joined as a JVM-local relation: an unchanged dictionary costs no Spark
+    job) and re-reads the route table (`read_routes`, a driver-side pandas
+    read, uncached); a dictionary or route-table update becomes visible to
+    the NEXT micro-batch with no query restart.
 
     Returns a function for `writeStream.foreachBatch(...)`; the caller owns
     trigger/checkpoint (exactly-once via Spark's sink commit log + the
@@ -191,24 +185,14 @@ def stream_routed_sink(dims_dir: str, sinks_root: str,
     """
     import os
 
-    import pyarrow.parquet as pq
-
+    from openlogparse_spark.enrich import read_dim
     from openlogparse_spark.route.router import read_routes, route_tags
 
     dim_path = os.path.join(dims_dir, "dim_tools.parquet")
-    dim_cache: dict = {}        # (path, st_mtime_ns, st_size) -> pyarrow table
-
-    def read_dim_tools(spark: SparkSession) -> DataFrame:
-        st = os.stat(dim_path)
-        key = (dim_path, st.st_mtime_ns, st.st_size)
-        if key not in dim_cache:
-            dim_cache.clear()
-            dim_cache[key] = pq.read_table(dim_path)
-        return spark.createDataFrame(dim_cache[key])
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        enriched = batch_df.join(F.broadcast(read_dim_tools(spark)), "tool", "left")
+        dim_tools = read_dim(batch_df.sparkSession, dim_path)
+        enriched = batch_df.join(F.broadcast(dim_tools), "tool", "left")
         routed = enriched.withColumn(
             "route_id", F.explode(route_tags(read_routes(dims_dir))))
         # batch-scoped subdir => re-processing a batch after a crash simply

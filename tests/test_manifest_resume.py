@@ -322,17 +322,19 @@ print('DONE', flush=True)
         _sink_digest(os.path.join(clean_root, "sinks"))
 
 
-# Spark jobs one warm run_pipeline runs on the sf0.01 fixture: 21 when
-# measured (35 while each staged table, aggregate and merged sink was
-# counted with a Spark read and the route table was read through Spark)
-WARM_JOB_BUDGET = 21
+# Spark jobs one warm run_pipeline runs on the sf0.01 fixture: 19 when
+# measured (21 while dim_tools and dim_roles were Spark parquet scans, each
+# with a schema-inference job; 35 while each staged table, aggregate and
+# merged sink was counted with a Spark read and the route table was read
+# through Spark)
+WARM_JOB_BUDGET = 19
 
 
 def test_warm_pipeline_job_count(spark, fx_dir_big):
     """Fixed cost of a batch job: after a cold run, a warm run_pipeline on
     the sf0.01 fixture runs at most WARM_JOB_BUDGET Spark jobs. Row counts
-    come from parquet footers and the route table is read with pandas, so
-    neither costs a job."""
+    come from parquet footers, the route table is read with pandas and the
+    dims with pyarrow, so none of them costs a job."""
     sc = spark.sparkContext
     jobs = {}
     for tag in ("cold", "warm"):
@@ -396,24 +398,64 @@ def test_template_table_over_budget_keeps_plan(spark, fx_dir, monkeypatch, caplo
     assert lazy.sink_counts == pinned.sink_counts
 
 
-def test_cli_timings_keep_types(spark, fx_dir, monkeypatch, capsys):
+def test_cli_timings_keep_types(spark, fx_dir, capsys):
     """The CLI's JSON line rounds float timings and keeps the boolean
-    `route_reshuffle` a JSON boolean."""
+    `route_reshuffle` a JSON boolean. Run inside a caller's session, the CLI
+    uses that session as it is and leaves it running."""
     import json
-
-    from pyspark.sql import SparkSession
 
     from openlogparse_spark.jobs.run_pipeline import main
 
     root = f"{TMP}_cli"
     shutil.rmtree(root, ignore_errors=True)
-    # main() stops its session on exit; keep the shared test session alive
-    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
-    # --cpus 8 matches the test session, whose settings main() reapplies
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
     assert main(["--input", os.path.join(fx_dir, "transcripts.parquet"),
-                 "--dims", fx_dir, "--output", root, "--cpus", "8",
+                 "--dims", fx_dir, "--output", root,
                  "--salt-buckets", "4"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert isinstance(out["timings"]["route_reshuffle"], bool)
     assert all(isinstance(v, float) for k, v in out["timings"].items()
                if k != "route_reshuffle")
+    assert spark.range(3).count() == 3
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
+
+
+def test_no_cached_data_left_behind(spark, fx_dir):
+    """A staged and a one-shot run_pipeline, and a parse_stage followed by
+    release_cached_inputs(), leave the session's persisted RDDs as they
+    found them, with the template table within the broadcast budget and
+    over it."""
+    import gc
+
+    from openlogparse_spark.parse import parse_stage
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        gc.collect()    # run the finalizers of unrelated released results
+        return set(jsc.getPersistentRDDs().keys())
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    raw = spark.read.parquet(os.path.join(fx_dir, "transcripts.parquet"))
+    try:
+        for budget in ("within", "over"):
+            if budget == "over":
+                spark.conf.set(key, "1024")
+            for staged in (True, False):
+                root = f"{TMP}_cache_{budget}_{staged}"
+                shutil.rmtree(root, ignore_errors=True)
+                before = persisted()
+                run_pipeline(spark, PipelineConfig(
+                    input_path=os.path.join(fx_dir, "transcripts.parquet"),
+                    dims_dir=fx_dir, output_root=root, salt_buckets=4,
+                    materialize_enriched=staged))
+                assert persisted() == before, (budget, staged)
+            before = persisted()
+            parsed = parse_stage(raw)
+            parsed.write.format("noop").mode("overwrite").save()
+            assert persisted() > before, budget    # the fit path did cache
+            parsed.release_cached_inputs()
+            assert persisted() == before, budget
+    finally:
+        spark.conf.set(key, threshold)

@@ -112,6 +112,40 @@ def test_drain_parity_on_structured_rows(spark, fx_dir):
     assert mism == 0
 
 
+def test_fit_path_template_table_over_budget(spark, raw, caplog):
+    """parse_stage's fit path pins the mined template table driver-side only
+    within the broadcast budget (autoBroadcastJoinThreshold). Over it one
+    line says why, the template join is not a broadcast, and every row gets
+    the same template id."""
+    import logging
+
+    from openlogparse_spark import session
+
+    def fit():
+        out = parse_stage(raw, mode="sql")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        rows = {tuple(r) for r in out.select(
+            "conv_id", "turn_idx", "template_id").collect()}
+        out.release_cached_inputs()
+        # pre-order tree string: the first join is the template join
+        return rows, next(ln for ln in plan.splitlines() if "Join" in ln)
+
+    pinned, pinned_join = fit()
+    assert "BroadcastHashJoin" in pinned_join
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        with caplog.at_level(logging.WARNING, logger=session.__name__):
+            lazy, lazy_join = fit()
+    finally:
+        spark.conf.set(key, threshold)
+    over = [r for r in caplog.records if "broadcast budget" in r.getMessage()]
+    assert len(over) == 1, over
+    assert "BroadcastHashJoin" not in lazy_join, lazy_join
+    assert lazy == pinned
+
+
 def test_quarantined_rows_are_the_corrupt_ones(parsed):
     """Quarantined rows carry no k=v structure (the planted garbage)."""
     bad = parsed.filter("NOT parse_ok")
